@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.F1Transforms
+import graft.operators.{F1Transforms, StagePool}
 import graft.sinks.{MergeEngine, ParquetSwapMergeEngine, TableSink}
 import graft.sources.EventSource
 import graft.sources.EventSource.WireFormat
@@ -88,24 +88,13 @@ object F1Pipeline {
     def dedupAppend(table: String, out: DataFrame, key: String): Unit
   }
 
-  /** Bounded pool for concurrent per-table sink jobs. Each table's
-    * read-merge-write is independent (distinct paths/tables, no shared
-    * session conf — [[TableSink]] mutates nothing session-wide), and Spark
-    * schedules jobs submitted from multiple threads concurrently, so the 8
-    * per-batch loads overlap instead of serializing their driver/commit
-    * latencies. Sized to the table count (round-16; was 4): each sink job
-    * is a small keyed merge whose cost is DRIVER/commit latency, not
-    * executor compute, so a batch that touches all eight tables was
-    * paying two serialized rounds — overlapping all of them cuts the
-    * trigger wall to ~the slowest single merge without oversubscribing
-    * the executor (the jobs' task counts are tiny).
+  /** Each table's read-merge-write is independent (distinct paths/tables,
+    * no shared session conf — [[TableSink]] mutates nothing session-wide),
+    * and Spark schedules jobs submitted from multiple threads concurrently,
+    * so the per-batch loads run on [[graft.operators.StagePool]] (one
+    * thread per table) and overlap instead of serializing their
+    * driver/commit latencies.
     */
-  private lazy val sinkPool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(8,
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-sink"); t.setDaemon(true); t
-      })
-
   private def loadBatchWith(events: DataFrame, batchId: Long,
       ops: BatchSinkOps): Unit = {
     // The streaming source carries a placeholder line_id (see EventSource);
@@ -118,14 +107,9 @@ object F1Pipeline {
       // race to compute it
       val presentTopics = cached.select("topic").distinct()
         .collect().map(_.getString(0)).toSet
-      val pending = tableSinks.flatMap { case (name, topics, transform, kind) =>
-        if (topics.intersect(presentTopics).isEmpty) None
-        else Some(sinkPool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            // the active session is a THREAD-LOCAL: without it, analysis on
-            // a pool thread resolves against a session whose function
-            // registry lacks the graft kernels (inflate_raw, …)
-            SparkSession.setActiveSession(cached.sparkSession)
+      val pending = tableSinks.collect {
+        case (name, topics, transform, kind) if topics.exists(presentTopics) =>
+          StagePool.submit(cached.sparkSession) {
             val out = TableSink.withSeq(ensureLineId(transform(cached)), batchId)
             kind match {
               case Upsert(keys)     => ops.upsert(name, out, keys)
@@ -138,53 +122,11 @@ object F1Pipeline {
               case DedupAppend(key) => ops.dedupAppend(name, out.drop("line_id"), key)
             }
           }
-        }))
       }
       // Await ALL tables before declaring the batch done (and before the
-      // finally-unpersist) — a failed table must fail the batch, but only
-      // after its siblings finish, so no write races a cache eviction.
-      // Interrupts: an InterruptedException must not abandon the await loop
-      // immediately (that unpersists the cache under running sinks, the
-      // exact race the pool exists to avoid) — but it must not wait
-      // UNBOUNDED either, or a hung sink job makes the stream execution
-      // thread uninterruptible and StreamingQuery.stop() wedges. After the
-      // first interrupt, siblings get a bounded grace window; past the
-      // deadline the remaining sinks are cancelled and the interrupt
-      // rethrown.
-      var interrupted = false
-      var deadlineNanos = 0L
-      val graceNanos = 30L * 1000 * 1000 * 1000
-      val failures = pending.flatMap { f =>
-        var result: Option[Throwable] = None
-        var done = false
-        while (!done) {
-          try {
-            if (interrupted) {
-              val remaining = deadlineNanos - System.nanoTime()
-              if (remaining <= 0) {
-                pending.foreach(_.cancel(true))
-                Thread.currentThread().interrupt()
-                throw new InterruptedException(
-                  "sink await interrupted and grace window expired; " +
-                    "remaining sink jobs cancelled")
-              }
-              f.get(remaining, java.util.concurrent.TimeUnit.NANOSECONDS)
-            } else f.get()
-            done = true
-          } catch {
-            case e: java.util.concurrent.ExecutionException =>
-              result = Some(e.getCause); done = true
-            case _: java.util.concurrent.CancellationException => done = true
-            case _: java.util.concurrent.TimeoutException => () // re-check deadline
-            case _: InterruptedException =>
-              interrupted = true
-              if (deadlineNanos == 0L) deadlineNanos = System.nanoTime() + graceNanos
-          }
-        }
-        result
-      }
-      if (interrupted) Thread.currentThread().interrupt()
-      failures.headOption.foreach(throw _)
+      // finally-unpersist): a failed table fails the batch, but only after
+      // its siblings finish, so no write races a cache eviction.
+      StagePool.getAll(pending)
     } finally cached.unpersist()
   }
 
@@ -234,23 +176,30 @@ object F1Pipeline {
         graft.sinks.JdbcSink.dedupAppend(spark, target, table, out, key)
     })
 
+  /** The one starter behind every unified pipeline: `events` with per-batch
+    * observed metrics (rows + corrupt lines, ST5/T13, surfaced in
+    * QueryProgress via [[Metrics.observed]]) → `load` per micro-batch.
+    */
+  private def startForeachBatch(events: DataFrame, queryName: String,
+      checkpointDir: String, trigger: Trigger)(
+      load: (DataFrame, Long) => Unit): StreamingQuery =
+    Metrics.observed(events).writeStream
+      .queryName(queryName)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, batchId: Long) => load(batch, batchId) }
+      .start()
+
   /** Unified streaming pipeline with the JDBC sink ([[loadBatchJdbc]]). */
   def startUnifiedJdbc(spark: SparkSession, sourceDir: String,
       target: graft.sinks.JdbcSink.JdbcTarget, checkpointDir: String,
       format: WireFormat = WireFormat.PyList,
       trigger: Trigger = Trigger.ProcessingTime("100 milliseconds"),
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val events = Metrics.observed(
-      EventSource.readStream(spark, sourceDir, format, maxFilesPerTrigger))
-    events.writeStream
-      .queryName("f1_unified_jdbc")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        loadBatchJdbc(spark, batch, target, batchId)
-      }
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    startForeachBatch(EventSource.readStream(spark, sourceDir, format, maxFilesPerTrigger),
+        "f1_unified_jdbc", checkpointDir, trigger) { (batch, batchId) =>
+      loadBatchJdbc(spark, batch, target, batchId)
+    }
 
   /** Unified pipeline: one streaming query, all tables per micro-batch.
     *
@@ -265,18 +214,11 @@ object F1Pipeline {
       checkpointDir: String, format: WireFormat = WireFormat.PyList,
       trigger: Trigger = Trigger.ProcessingTime("100 milliseconds"),
       maxFilesPerTrigger: Option[Int] = None,
-      engine: MergeEngine = ParquetSwapMergeEngine): StreamingQuery = {
-    val events = Metrics.observed(
-      EventSource.readStream(spark, sourceDir, format, maxFilesPerTrigger))
-    events.writeStream
-      .queryName("f1_unified")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        loadBatch(spark, batch, tablesDir, batchId, engine)
-      }
-      .start()
-  }
+      engine: MergeEngine = ParquetSwapMergeEngine): StreamingQuery =
+    startForeachBatch(EventSource.readStream(spark, sourceDir, format, maxFilesPerTrigger),
+        "f1_unified", checkpointDir, trigger) { (batch, batchId) =>
+      loadBatch(spark, batch, tablesDir, batchId, engine)
+    }
 
   /** Unified pipeline fed from a LIVE network feed (S1:
     * [[graft.sources.EventSource.readLiveFeed]]) instead of the file
@@ -289,18 +231,11 @@ object F1Pipeline {
   def startUnifiedLive(spark: SparkSession, host: String, port: Int,
       tablesDir: String, checkpointDir: String,
       format: WireFormat = WireFormat.PyList,
-      trigger: Trigger = Trigger.ProcessingTime("100 milliseconds")): StreamingQuery = {
-    val events = Metrics.observed(
-      graft.sources.EventSource.readLiveFeed(spark, host, port, format))
-    events.writeStream
-      .queryName("f1_unified_live")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        loadBatch(spark, batch, tablesDir, batchId)
-      }
-      .start()
-  }
+      trigger: Trigger = Trigger.ProcessingTime("100 milliseconds")): StreamingQuery =
+    startForeachBatch(EventSource.readLiveFeed(spark, host, port, format),
+        "f1_unified_live", checkpointDir, trigger) { (batch, batchId) =>
+      loadBatch(spark, batch, tablesDir, batchId)
+    }
 
   /** Per-topic parallelism (ST2): independent queries with independent
     * checkpoints — the monitors' process-level parallelism, minus the

@@ -28,25 +28,22 @@ object Harness {
       // instead of maximizing parallelism (guide §2.2 "fewer, larger
       // reduce partitions"; the Spark config reference itself recommends
       // parallelismFirst=false "to respect the configured target size").
-      // This is scale-ADAPTIVE, not a core-count tune: partition count is
-      // derived from shuffle bytes / 64 MB, so a 100 TB shuffle still
-      // fans out to ~1.6M partitions while a 2 MB per-trigger micro-batch
-      // stage collapses to 1 task instead of `cores` tiny ones — the
-      // round-16 verdict's anti-scaling family (x43, x48, x49, x13, x16)
-      // was exactly per-trigger task count growing with local core count.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
+      // AQE only merges partitions DOWNWARD from
+      // `spark.sql.shuffle.partitions` (= cores here), so this never adds
+      // partitions: a large shuffle stays at `cores` partitions, while a
+      // 2 MB per-trigger micro-batch stage collapses to 1 task instead of
+      // `cores` tiny ones — the round-16 verdict's anti-scaling family
+      // (x43, x48, x49, x13, x16) was exactly per-trigger task count
+      // growing with local core count.
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
       // Let AQE size CACHED plans too (off by default for historical
       // partitioning-stability reasons): every `.persist()` that follows
       // a shuffle — the LSH signature frames, the streaming-dedup
       // increment frames — otherwise pins `spark.sql.shuffle.partitions`
       // partitions into the cache, and every consumer pays a
-      // core-count-sized map stage over mostly-empty blocks. Size-derived
-      // either way, so this is the same §2 scale-adaptivity as above.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_PLANS", "true"))
+      // core-count-sized map stage over mostly-empty blocks.
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       // File listing below this path count happens driver-side (µs on
       // any FS metadata service) instead of launching a distributed
       // listing JOB (~100 ms fixed): the manifest stores re-plan their

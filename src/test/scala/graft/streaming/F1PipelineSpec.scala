@@ -2,12 +2,12 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.f1.Fixtures
-import graft.sinks.TableSink
+import graft.sinks.{MergeEngine, ParquetSwapMergeEngine, TableSink}
 
 /** Streaming-semantics tests (SURVEY §5 plan #5): the unified pipeline over
   * a file source, cross-batch upsert convergence, replay idempotence, and
@@ -18,6 +18,44 @@ class F1PipelineSpec extends SparkSpec {
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
+
+  /** The default parquet engine with `before(op)` run ahead of every
+    * operation — the seam tests' recording/blocking probe.
+    */
+  private class HookedEngine(before: String => Unit) extends MergeEngine {
+    def upsert(s: SparkSession, p: String, b: DataFrame, k: Seq[String]): Unit = {
+      before("upsert"); ParquetSwapMergeEngine.upsert(s, p, b, k)
+    }
+    def coalescingUpsert(s: SparkSession, p: String, b: DataFrame, k: Seq[String]): Unit = {
+      before("coalescing"); ParquetSwapMergeEngine.coalescingUpsert(s, p, b, k)
+    }
+    def partitionedCoalescingUpsert(s: SparkSession, p: String, b: DataFrame,
+        k: Seq[String], pc: String): Unit = {
+      before("partitionedCoalescing")
+      ParquetSwapMergeEngine.partitionedCoalescingUpsert(s, p, b, k, pc)
+    }
+    def append(p: String, b: DataFrame): Unit = {
+      before("append"); ParquetSwapMergeEngine.append(p, b)
+    }
+    def dedupAppend(s: SparkSession, p: String, b: DataFrame, k: String): Unit = {
+      before("dedupAppend"); ParquetSwapMergeEngine.dedupAppend(s, p, b, k)
+    }
+    def compact(s: SparkSession, p: String, t: Long): Unit =
+      ParquetSwapMergeEngine.compact(s, p, t)
+    def replacePartitions(s: SparkSession, p: String, b: DataFrame, pc: String,
+        parts: Seq[Any]): Unit = {
+      before("replacePartitions"); ParquetSwapMergeEngine.replacePartitions(s, p, b, pc, parts)
+    }
+    def overwrite(s: SparkSession, p: String, b: DataFrame): Unit = {
+      before("overwrite"); ParquetSwapMergeEngine.overwrite(s, p, b)
+    }
+    def read(s: SparkSession, p: String): Option[DataFrame] = {
+      before("read"); ParquetSwapMergeEngine.read(s, p)
+    }
+    def appendPartitioned(p: String, b: DataFrame, pc: String): Unit = {
+      before("appendPartitioned"); ParquetSwapMergeEngine.appendPartitioned(p, b, pc)
+    }
+  }
 
   test("unified streaming pipeline: two files → two batches → converged tables") {
     val src = tmp("f1src")
@@ -128,53 +166,9 @@ class F1PipelineSpec extends SparkSpec {
     // A recording engine wrapping the parquet default: proves the pipeline
     // dispatches 100% of its table maintenance through the MergeEngine
     // trait (the one-class ACID swap point), with unchanged semantics.
-    import graft.sinks.{MergeEngine, ParquetSwapMergeEngine}
     import java.util.concurrent.ConcurrentHashMap
     val calls = new ConcurrentHashMap[String, Integer]()
-    def bump(op: String): Unit = calls.merge(op, 1, (a, b) => a + b)
-    val recording = new MergeEngine {
-      def upsert(s: org.apache.spark.sql.SparkSession, p: String,
-          b: org.apache.spark.sql.DataFrame, k: Seq[String]): Unit = {
-        bump("upsert"); ParquetSwapMergeEngine.upsert(s, p, b, k)
-      }
-      def coalescingUpsert(s: org.apache.spark.sql.SparkSession, p: String,
-          b: org.apache.spark.sql.DataFrame, k: Seq[String]): Unit = {
-        bump("coalescing"); ParquetSwapMergeEngine.coalescingUpsert(s, p, b, k)
-      }
-      def partitionedCoalescingUpsert(s: org.apache.spark.sql.SparkSession,
-          p: String, b: org.apache.spark.sql.DataFrame, k: Seq[String],
-          pc: String): Unit = {
-        bump("partitionedCoalescing")
-        ParquetSwapMergeEngine.partitionedCoalescingUpsert(s, p, b, k, pc)
-      }
-      def append(p: String, b: org.apache.spark.sql.DataFrame): Unit = {
-        bump("append"); ParquetSwapMergeEngine.append(p, b)
-      }
-      def dedupAppend(s: org.apache.spark.sql.SparkSession, p: String,
-          b: org.apache.spark.sql.DataFrame, k: String): Unit = {
-        bump("dedupAppend"); ParquetSwapMergeEngine.dedupAppend(s, p, b, k)
-      }
-      def compact(s: org.apache.spark.sql.SparkSession, p: String,
-          t: Long): Unit = ParquetSwapMergeEngine.compact(s, p, t)
-      def replacePartitions(s: org.apache.spark.sql.SparkSession, p: String,
-          b: org.apache.spark.sql.DataFrame, pc: String,
-          parts: Seq[Any]): Unit = {
-        bump("replacePartitions")
-        ParquetSwapMergeEngine.replacePartitions(s, p, b, pc, parts)
-      }
-      def overwrite(s: org.apache.spark.sql.SparkSession, p: String,
-          b: org.apache.spark.sql.DataFrame): Unit = {
-        bump("overwrite"); ParquetSwapMergeEngine.overwrite(s, p, b)
-      }
-      def read(s: org.apache.spark.sql.SparkSession,
-          p: String): Option[org.apache.spark.sql.DataFrame] = {
-        bump("read"); ParquetSwapMergeEngine.read(s, p)
-      }
-      def appendPartitioned(p: String, b: org.apache.spark.sql.DataFrame,
-          pc: String): Unit = {
-        bump("appendPartitioned"); ParquetSwapMergeEngine.appendPartitioned(p, b, pc)
-      }
-    }
+    val recording = new HookedEngine(op => calls.merge(op, 1, (a, b) => a + b))
 
     val src = tmp("f1srcE")
     val tables = tmp("f1tablesE")
@@ -207,6 +201,89 @@ class F1PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$tables/lap_data").count() == 2)
     assert(spark.read.parquet(s"$tables/sessions").count() == 1)
     assert(spark.read.parquet(s"$tables/race_control").count() == 2)
+  }
+
+  test("a restarted unified query's sink jobs carry its own query id and group, so stop() cancels them") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, TimeUnit}
+    import java.util.concurrent.atomic.AtomicBoolean
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val (part1, part2) = Fixtures.pyLines.splitAt(6)
+
+    // a first query whose two triggers run sink jobs on the pool's
+    // threads, then stops: the second query's sinks reuse those threads
+    val src1 = tmp("f1srcQ1")
+    val q1 = F1Pipeline.startUnified(spark, src1, tmp("f1tablesQ1"), tmp("f1ckptQ1"),
+      trigger = Trigger.ProcessingTime("50 milliseconds"), maxFilesPerTrigger = Some(1))
+    try Seq(part1, part2).zipWithIndex.foreach { case (lines, i) =>
+      Files.write(java.nio.file.Paths.get(s"$src1/p$i.txt"), lines.mkString("\n").getBytes)
+      q1.processAllAvailable()
+    } finally q1.stop()
+
+    // (submit time, query id, job group, description) of every job
+    val jobs = new ConcurrentLinkedQueue[(Long, String, String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties).getOrElse(new java.util.Properties)
+        jobs.add((e.time, p.getProperty("sql.streaming.queryId"),
+          p.getProperty("spark.jobGroup.id"), p.getProperty("spark.job.description")))
+      }
+    }
+    // listener events arrive in submit order, and a job is active by the
+    // time its start event is seen
+    def awaitJob(desc: String): Unit = {
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
+      while (!jobs.asScala.exists(_._4 == desc)) {
+        assert(System.nanoTime() < deadline, s"job '$desc' never reached the listener")
+        Thread.sleep(20)
+      }
+    }
+    // the second query's engine blocks one sink inside a long Spark job
+    val armed = new AtomicBoolean(false)
+    val blocking = new HookedEngine(_ => if (armed.compareAndSet(true, false)) {
+      sc.setJobDescription("f1-blocking")
+      sc.parallelize(Seq(1), 1).foreach(_ => Thread.sleep(60000))
+    })
+    val src2 = tmp("f1srcQ2")
+    Files.write(java.nio.file.Paths.get(s"$src2/p1.txt"), part1.mkString("\n").getBytes)
+    sc.addSparkListener(listener)
+    val t0 = System.currentTimeMillis()
+    val q2 = F1Pipeline.startUnified(spark, src2, tmp("f1tablesQ2"), tmp("f1ckptQ2"),
+      trigger = Trigger.ProcessingTime("50 milliseconds"), engine = blocking)
+    val stopper = new Thread(() => q2.stop())
+    stopper.setDaemon(true)
+    try {
+      q2.processAllAvailable()
+      // once this job is seen, every job of q2's triggers has been recorded
+      sc.setJobDescription("f1-marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      awaitJob("f1-marker")
+      val during = jobs.asScala.toSeq.filter(j => j._1 >= t0 && j._4 != "f1-marker")
+      assert(during.nonEmpty)
+      val foreign = during.filter(j => j._2 != q2.id.toString || j._3 != q2.runId.toString)
+
+      armed.set(true)
+      Files.write(java.nio.file.Paths.get(s"$src2/p2.txt"), part2.mkString("\n").getBytes)
+      awaitJob("f1-blocking")
+      // stop() on a helper thread, so a stop that never returns fails the
+      // test instead of hanging it
+      stopper.start()
+      stopper.join(10000)
+      val problems = Seq(
+        Option.when(foreign.nonEmpty)(s"${foreign.size} of ${during.size} jobs of the " +
+          s"second query's triggers carry another (query id, job group): " +
+          foreign.map(j => (j._2, j._3)).distinct.mkString(", ")),
+        Option.when(stopper.isAlive)(
+          "stop() did not return within 10 s: the blocked sink job was not cancelled")).flatten
+      if (problems.nonEmpty) fail(problems.mkString("; "))
+    } finally {
+      if (stopper.getState == Thread.State.NEW) q2.stop()
+      sc.removeSparkListener(listener)
+      // do not leave the sleeping task holding an executor slot if the
+      // cancellation under test failed
+      sc.cancelAllJobs()
+    }
   }
 
   test("coalescing upsert is idempotent under batch replay (U3)") {
@@ -334,41 +411,6 @@ class F1PipelineSpec extends SparkSpec {
     // replaying the OLDER batch must not regress the row (lower _seq loses)
     assert(spark.read.parquet(path).head().getAs[String]("name") == "Quali v2")
     assert(spark.read.parquet(path).count() == 1)
-  }
-
-  test("state-store lap consolidation (flatMapGroupsWithState) matches the batch path") {
-    val src = tmp("f1srcS")
-    val out = tmp("f1outS")
-    val ckpt = tmp("f1ckptS")
-    val (p1, p2) = Fixtures.pyLines.splitAt(6)
-    Files.write(java.nio.file.Paths.get(s"$src/p1.txt"), p1.mkString("\n").getBytes)
-    val events = graft.sources.EventSource.readStream(spark, src)
-    val laps = LapState.consolidate(LapState.fragments(events))
-    val q = laps.toDF().writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        // each emitted row is the FULL merged state of its key, so a
-        // whole-row last-wins upsert lands the final state per key
-        TableSink.upsert(spark, s"$out/lap_state",
-          TableSink.withSeq(b.withColumn("line_id", lit(0L)), id),
-          Seq("driver_number", "lap_number"))
-      }
-      .start()
-    try {
-      q.processAllAvailable()
-      Files.write(java.nio.file.Paths.get(s"$src/p2.txt"), p2.mkString("\n").getBytes)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select("driver_number", "lap_number", "lap_time", "sector_1_time",
-        "sector_2_time", "sector_3_time", "speed_trap", "timestamp")
-        .collect().map(_.toSeq).toSet
-    val got = canon(spark.read.parquet(s"$out/lap_state"))
-    val expected = canon(graft.operators.F1Transforms.laps(
-      graft.sources.EventSource.fromLines(spark, Fixtures.pyLines)))
-    assert(got == expected, s"state path:\n$got\nbatch path:\n$expected")
   }
 
   test("unified pipeline through the JDBC sink (embedded Derby) converges like parquet") {
