@@ -64,10 +64,13 @@ object EventSource {
     }
     parsed
       .withColumn("event_ts", Coercions.parseTs(col("ts")))
-      // Arrival-order id for first-wins dedup (A1): valid because the text
-      // source assigns split indexes in file/offset order; documented caveat
-      // in SURVEY §7.4 — ids are ordered, not dense. Streaming frames can't
-      // host monotonically_increasing_id — there the micro-batch loader
+      // Order id for first-wins dedup (A1). It follows arrival order only
+      // within one file: split indexes run in offset order there, but the
+      // file source packs the splits of SEVERAL files by descending size,
+      // so across files in one scan or micro-batch the order is by file
+      // size, not landing order (ROADMAP open item 4). Ids are ordered,
+      // not dense (SURVEY §7.4). Streaming frames can't host
+      // monotonically_increasing_id — there the micro-batch loader
       // reassigns it per batch (F1Pipeline.loadBatch), and pure-append
       // streaming sinks use the 0 placeholder (in-batch order irrelevant).
       .withColumn("line_id",

@@ -35,11 +35,11 @@ object F1Pipeline {
     */
   sealed trait SinkKind
   case class Upsert(keys: Seq[String]) extends SinkKind
-  case class Coalescing(keys: Seq[String]) extends SinkKind
-  /** [[Coalescing]] over a `partitionCol`-partitioned table layout: each
-    * merge rewrites only the partitions present in the batch (see
-    * [[TableSink.partitionedCoalescingUpsert]]) — the scale path for a
-    * high-churn keyed table that outgrows dimension-sized full rewrites.
+  /** Per-column last-non-null upsert over a `partitionCol`-partitioned
+    * table layout: each merge rewrites only the partitions present in the
+    * batch (see [[TableSink.partitionedCoalescingUpsert]]) — the scale
+    * path for a high-churn keyed table that outgrows dimension-sized full
+    * rewrites.
     */
   case class PartitionedCoalescing(keys: Seq[String], partitionCol: String) extends SinkKind
   case object Append extends SinkKind
@@ -81,7 +81,6 @@ object F1Pipeline {
     */
   private trait BatchSinkOps {
     def upsert(table: String, out: DataFrame, keys: Seq[String]): Unit
-    def coalescing(table: String, out: DataFrame, keys: Seq[String]): Unit
     def partitionedCoalescing(table: String, out: DataFrame, keys: Seq[String],
         partitionCol: String): Unit
     def append(table: String, out: DataFrame): Unit
@@ -113,7 +112,6 @@ object F1Pipeline {
             val out = TableSink.withSeq(ensureLineId(transform(cached)), batchId)
             kind match {
               case Upsert(keys)     => ops.upsert(name, out, keys)
-              case Coalescing(keys) => ops.coalescing(name, out, keys)
               case PartitionedCoalescing(keys, pc) =>
                 ops.partitionedCoalescing(name, out, keys, pc)
               case Append           => ops.append(name, out.drop("_batch", "_line", "line_id"))
@@ -141,8 +139,6 @@ object F1Pipeline {
     loadBatchWith(events, batchId, new BatchSinkOps {
       def upsert(table: String, out: DataFrame, keys: Seq[String]): Unit =
         engine.upsert(spark, s"$tablesDir/$table", out, keys)
-      def coalescing(table: String, out: DataFrame, keys: Seq[String]): Unit =
-        engine.coalescingUpsert(spark, s"$tablesDir/$table", out, keys)
       def partitionedCoalescing(table: String, out: DataFrame, keys: Seq[String],
           partitionCol: String): Unit =
         engine.partitionedCoalescingUpsert(spark, s"$tablesDir/$table", out,
@@ -163,8 +159,6 @@ object F1Pipeline {
     loadBatchWith(events, batchId, new BatchSinkOps {
       def upsert(table: String, out: DataFrame, keys: Seq[String]): Unit =
         graft.sinks.JdbcSink.upsert(spark, target, table, out, keys)
-      def coalescing(table: String, out: DataFrame, keys: Seq[String]): Unit =
-        graft.sinks.JdbcSink.coalescingUpsert(spark, target, table, out, keys)
       // a keyed SQL merge already touches only the affected rows — the
       // partition-pruned rewrite is a parquet-layout concern
       def partitionedCoalescing(table: String, out: DataFrame, keys: Seq[String],
@@ -237,16 +231,16 @@ object F1Pipeline {
       loadBatch(spark, batch, tablesDir, batchId)
     }
 
-  /** Per-topic parallelism (ST2): independent queries with independent
-    * checkpoints — the monitors' process-level parallelism, minus the
-    * processes. Race control gets the watermarked streaming dedup (A2).
-    * `maxFilesPerTrigger` paces each query's replay independently (ST1).
-    */
   /** The four monitor topics, in the reference's launch order
     * (`orchestrator-simple.py:26-31` script_map). */
   val MonitorTopics: Seq[String] =
     Seq("weather", "telemetry", "car_positions", "race_control")
 
+  /** Per-topic parallelism (ST2): independent queries with independent
+    * checkpoints — the monitors' process-level parallelism, minus the
+    * processes. Race control gets the watermarked streaming dedup (A2).
+    * `maxFilesPerTrigger` paces each query's replay independently (ST1).
+    */
   def startPerTopic(spark: SparkSession, sourceDir: String, tablesDir: String,
       checkpointRoot: String, format: WireFormat = WireFormat.PyList,
       trigger: Trigger = Trigger.ProcessingTime("100 milliseconds"),

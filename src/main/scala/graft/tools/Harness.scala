@@ -2,11 +2,13 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** One session-builder + one noop-sink timer shared by every measurement
-  * main (Bench, ColdWarmBench) and the correctness dump (Verify). The
-  * configs drifting apart between these runners silently breaks their
-  * comparability — Verify had already lost `spark.sql.adaptive.enabled`
-  * relative to Bench before this was extracted.
+/** One session-builder + one noop-sink timer. Every main builds its
+  * session here: the measurement mains (Bench, ColdWarmBench, ScaleProbe,
+  * ProfileQuery, RegistrySweep), Orchestrate and the correctness dump
+  * (Verify). The configs drifting apart between these runners silently
+  * breaks their comparability — Verify had already lost
+  * `spark.sql.adaptive.enabled` relative to Bench before this was
+  * extracted.
   */
 object Harness {
 

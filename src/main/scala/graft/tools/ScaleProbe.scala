@@ -2,649 +2,27 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.f1.Fixtures
-import graft.streaming.{F1Pipeline, Metrics}
-
-/** Streaming-path scale probe (BASELINE.md evidence, not a driver gate):
-  * generates an n-line synthetic capture, drains it through the unified
-  * multi-table ETL and/or the per-topic monitor topology, and prints one
-  * JSON line with rows/s and per-batch latency percentiles.
+/** Data-dominated scale probes (SCALING.md / BASELINE.md evidence, not a
+  * driver gate): each mode grows one operator family to a corpus size
+  * where wall clearly tracks data, prints one JSON line per timed stage,
+  * and checks an exact quality invariant next to every wall so a
+  * fast-but-wrong scale-up cannot read as a win.
   *
-  *   sbt "runMain graft.tools.ScaleProbe 240000 unified"
-  *   sbt "runMain graft.tools.ScaleProbe 240000 pertopic"
+  *   scripts/run_scale_probe.sh <heap> <factor> <mode> <log>
+  *   sbt "runMain graft.tools.ScaleProbe <factor> <mode>"
   *
-  * The capture is split into 16 files paced 2-per-trigger so the run
-  * exercises real micro-batch boundaries (merge sinks see cross-batch
-  * keys), not one giant batch.
+  * Modes: `datadom2` (persisted BM25 index + tokenizer training),
+  * `datadom3` (line dedup + Bloom ingest prefilter), `datadom4` (heavy
+  * hitters, KN trigram, 1-bit ANN), `datadom6` (streaming ANN index
+  * growth) and `datadom6lex` (streaming lexical index growth). The
+  * session comes from [[Harness.buildSession]].
   */
 object ScaleProbe {
 
-  /** Dedup/ANN probe: replicate the sf0.1 tables `factor`× with a
-    * one-token suffix perturbation. On ~56-token docs that leaves
-    * replica Jaccard ≈ 0.9, so each original fans into a factor-sized
-    * near-dup CLIQUE (every-5th rows are exact copies) — a deliberately
-    * dup-saturated stress corpus: pair count grows ~factor²·docs (the
-    * recorded 250,401 pairs at 50k docs) and the probe times the chain
-    * under clique-dense load, the worst case for banding, components and
-    * verdicts. Times the pair→cluster→verdict chain, the incremental
-    * variant, and PQ build/search — the committed, reproducible form of
-    * the BASELINE.md round-5 numbers.
-    *
-    *   sbt "runMain graft.tools.ScaleProbe 10 dedup"
-    */
-  /** Round-10 curation operators at probe scale: the trained quality
-    * classifier (distributed GD train + map-only score), 13-gram
-    * containment decontamination, and SemDeDup — each timed on a
-    * `factor`× replication of the sf0.1 corpus/embeddings with planted
-    * signal, printing quality alongside wall so a speed win that
-    * destroys separation/detection can't read as a win.
-    *
-    *   sbt "runMain graft.tools.ScaleProbe 10 curation"
-    */
-  private def curationProbe(spark: SparkSession, factor: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.{Classifier, Dedup}
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"""{"probe":"$name","wall_sec":${(System.nanoTime() - t0) / 1e9}%.1f}""")
-      r
-    }
-    val par = spark.sparkContext.defaultParallelism
-    val docs0 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      .select("doc_id", "text")
-    val docs = (0 until factor).map(i => docs0.select(
-      (col("doc_id") + lit(i * 1000000L)).as("doc_id"), col("text")))
-      .reduce(_ unionByName _).repartition(par)
-    // classifier corpus: spam planted on id % 3 == 0, trained on the
-    // id % 5 == 0 slice (both classes present), scored over everything
-    val spamText = " click here buy now free offer limited prize winner " +
-      "cheap deal subscribe click here buy now free offer"
-    val labeled = docs.select(col("doc_id"),
-        when(pmod(col("doc_id"), lit(3)) === 0, concat(col("text"), lit(spamText)))
-          .otherwise(col("text")).as("text"),
-        when(pmod(col("doc_id"), lit(3)) === 0, lit(0.0)).otherwise(lit(1.0))
-          .as("label"))
-      .cache()
-    println(s"""{"probe":"corpus","docs":${labeled.count()}}""")
-    val model = timed("classifier_train_10it") {
-      Classifier.trainQualityLr(labeled.filter(pmod(col("doc_id"), lit(5)) === 0),
-        "doc_id", "text", "label", dim = 2048, iters = 10, lr = 1600.0)
-    }
-    timed("classifier_score_all") {
-      val scored = Classifier.score(labeled, "doc_id", "text", model)
-        .join(labeled.select(col("doc_id"), col("label")), "doc_id")
-      val sep = scored.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-        .groupBy("label")
-        .agg(min("quality_score").as("mn"), max("quality_score").as("mx"))
-        .orderBy("label").collect()
-      println(s"""{"probe":"classifier_heldout","spam_max":${sep(0).getDouble(2)},"clean_min":${sep(1).getDouble(1)}}""")
-    }
-    // containment decontamination: 100 benchmark prompts (400-char
-    // suffixes of the base docs) against the full replicated corpus —
-    // every replica of those 100 docs must surface
-    timed("containment_13gram") {
-      val bench = docs0.filter(col("doc_id") < 100).select(
-        (col("doc_id") + 5000000L).as("bench_id"),
-        expr("substring(text, greatest(length(text) - 399, 1), 400)").as("prompt"))
-      val hits = Dedup.containmentDecontaminate(docs.select("doc_id", "text"),
-        "doc_id", "text", bench, "bench_id", "prompt", n = 13, minRatio = 0.9)
-      println(s"""{"probe":"containment_pairs","n":${hits.count()},"expect":${100 * factor}}""")
-    }
-    labeled.unpersist()
-    // SemDeDup: factor× the embeddings with perturbed planted copies of
-    // the base rows (the x59 fixture shape at scale)
-    val emb0 = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val emb = (0 until factor).map(i => emb0.select(
-      (col("vec_id") + lit(i * 10000000L)).as("vec_id"),
-      (if (i == 0) col("embedding")
-       else transform(col("embedding"), (x, j) =>
-        x * (lit(1.0f) + lit(0.002f * i) *
-          when(pmod(j, lit(2)) === 0, lit(1.0f)).otherwise(lit(-1.0f)))))
-        .as("embedding")))
-      .reduce(_ unionByName _).repartition(par).cache()
-    println(s"""{"probe":"vectors","n":${emb.count()}}""")
-    timed(s"semdedup_${factor}x") {
-      val out = Dedup.semDeDup(emb, "vec_id", "embedding",
-        nClusters = 64, minCos = 0.999, iters = 2).cache()
-      val dropped = out.filter(!col("keep")).count()
-      val capped = out.filter(col("cluster_size") > 100000L).count()
-      println(s"""{"probe":"semdedup_verdicts","n":${out.count()},"dropped":$dropped,"capped_rows":$capped}""")
-      out.unpersist()
-    }
-    emb.unpersist()
-  }
-
-  private def dedupProbe(spark: SparkSession, factor: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.{Dedup, Similarity}
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"""{"probe":"$name","wall_sec":${(System.nanoTime() - t0) / 1e9}%.1f}""")
-      r
-    }
-    val par = spark.sparkContext.defaultParallelism
-    val docs0 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      .select("doc_id", "text")
-    val docs = (0 until factor).map(i => docs0.select(
-      (col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-      (if (i == 0) col("text")
-       else when(col("doc_id") % 5 === 0, col("text"))
-         .otherwise(concat(col("text"), lit(" v" + i)))).as("text")))
-      .reduce(_ unionByName _).repartition(par).cache()
-    println(s"""{"probe":"corpus","docs":${docs.count()}}""")
-    val pairs = timed("minhash_pairs") {
-      val p = Dedup.minhashLsh(docs, "doc_id", "text", 3, 32, 8, 0.5).cache()
-      println(s"""{"probe":"pairs","n":${p.count()}}""")
-      p
-    }
-    timed("connected_components") {
-      Dedup.connectedComponents(pairs, "a_id", "b_id").count()
-    }
-    timed("keep_decisions") {
-      Dedup.keepDecisions(docs, "doc_id", pairs).filter(!col("keep")).count()
-    }
-    timed("duplicate_spans") {
-      Dedup.duplicateSpans(docs, "doc_id", "text", n = 8, minDocs = 2).count()
-    }
-    val cut = (factor.toLong - 1) * 1000000L
-    timed("incremental_lsh") {
-      Dedup.minhashLshIncremental(
-        docs.filter(col("doc_id") < cut), docs.filter(col("doc_id") >= cut),
-        "doc_id", "text", 3, 32, 8, 0.5).count()
-    }
-    // streaming incremental dedup: the same corpus in 5 arrival files —
-    // per-batch cost must track the increment, not the accumulated state
-    timed("streaming_dedup_5_batches") {
-      val base = java.nio.file.Files.createTempDirectory("sdprobe").toString
-      val src = s"$base/src"
-      new java.io.File(src).mkdirs()
-      def land(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-        val tmp = java.nio.file.Files.createTempDirectory("arr").toString
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(s"$src/$name"))
-      }
-      val q = Dedup.streamingMinhashDedup(spark, src, docs.schema,
-        s"$base/state", s"$base/pairs", s"$base/ckpt", "doc_id", "text",
-        compactEvery = 4)
-      try {
-        // per-arrival wall: with the persisted band-bucket index this must
-        // stay ~flat as the state grows (equal-size increments; before the
-        // index, batch N re-derived buckets over N·increment signatures)
-        (0 until 5).foreach { i =>
-          val b0 = System.nanoTime()
-          land(docs.filter(pmod(col("doc_id"), lit(5)) === i), f"a$i.parquet")
-          q.processAllAvailable()
-          println(f"""{"probe":"streaming_dedup_batch","i":$i,"wall_sec":${
-            (System.nanoTime() - b0) / 1e9}%.1f}""")
-        }
-      } finally q.stop()
-      println(s"""{"probe":"streaming_dedup_pairs","n":${
-        spark.read.parquet(s"$base/pairs").dropDuplicates("a_id", "b_id").count()},"state_rows":${
-        spark.read.parquet(s"$base/state/sigs").count()}}""")
-    }
-    val emb0 = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-    val emb = (0 until factor).map(i => emb0.select(
-      (col("vec_id") + lit(i * 1000000L)).as("c_id"), col("embedding").as("c_vec")))
-      .reduce(_ unionByName _).repartition(par).cache()
-    println(s"""{"probe":"vectors","n":${emb.count()}}""")
-    val model = timed("pq_build")(Similarity.buildPq(emb, "c_id", "c_vec", 16, 16, 2))
-    val queries = emb0.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    timed("pq_topk_rerank") {
-      Similarity.pqTopK(model, emb, queries,
-        "c_id", "c_vec", "q_id", "q_vec", 5, rerank = 50).count()
-    }
-  }
-
-  /** Timeseries-family probe: replicate sf0.1 events `factor`× with
-    * DISJOINT user-id ranges per replica (sf0.1 user_ids span 0–1499, so
-    * the shift must exceed that span — an overlapping shift would
-    * superpose replicas' timelines onto shared users, merging sessions
-    * and cross-attributing as-of matches) and a small per-replica ts
-    * jitter, then time as-of join, sessionization, range join, and the
-    * HLL sketch — the window/bucket formulations' committed scale
-    * evidence.
-    *
-    *   sbt "runMain graft.tools.ScaleProbe 10 timeseries"
-    */
-  private def timeseriesProbe(spark: SparkSession, factor: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.{AsofJoin, RangeJoin, Sessionize}
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"""{"probe":"$name","wall_sec":${(System.nanoTime() - t0) / 1e9}%.1f}""")
-      r
-    }
-    val par = spark.sparkContext.defaultParallelism
-    // through Tables.events: normalizes ts to the epoch-nanos-long
-    // contract whatever the parquet physical type (ns or µs)
-    val ev0 = graft.tables.Tables.events(spark, "/root/testdata/sf0.1")
-      .select("event_id", "user_id", "event_type", "ts")
-    val ev = (0 until factor).map(i => ev0.select(
-      (col("event_id") + lit(i * 10000000L)).as("event_id"),
-      (col("user_id") + lit(i * 100000L)).as("user_id"), // > the 0–1499 span
-      col("event_type"),
-      (col("ts") + lit(i * 7919L * 1000000L)).as("ts")))
-      .reduce(_ unionByName _).repartition(par).cache()
-    println(s"""{"probe":"events","n":${ev.count()}}""")
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts"), col("event_id").as("click_id"))
-    timed("asof_join") {
-      AsofJoin.asofJoin(purchases, clicks, Seq("user_id"), "ts", "ts",
-        Map("click_id" -> "click_id"), rightTieBreak = "click_id").count()
-    }
-    timed("sessionize") {
-      Sessionize.sessionStats(ev, Seq("user_id"), "ts", "event_id",
-        maxGap = 1800000000000L).count()
-    }
-    timed("range_join") {
-      val windows = ev.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts").as("w_start"),
-          (col("ts") + lit(7200000000000L)).as("w_end"))
-      RangeJoin.pointInInterval(purchases, windows, Seq("user_id"),
-        "ts", "w_start", "w_end", bucketWidth = 7200000000000L).count()
-    }
-    timed("overlap_join") {
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts").as("a_start"),
-          (col("ts") + lit(7200000000000L)).as("a_end"))
-      val errors = ev.filter(col("event_type") === "error")
-        .select(col("user_id"), col("ts").as("b_start"),
-          (col("ts") + lit(3600000000000L)).as("b_end"))
-      RangeJoin.intervalOverlap(signups, errors, Seq("user_id"),
-        "a_start", "a_end", "b_start", "b_end",
-        bucketWidth = 7200000000000L).count()
-    }
-    timed("hll_sketch") {
-      ev.groupBy("event_type")
-        .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id")))).count()
-    }
-  }
-
-  /** Persisted-ANN-index probe (round-7 directive #1 evidence): attribute
-    * the build-once/search-many split on a factor×-replicated embedding
-    * corpus. Reports index build+save, load, SEARCH-ONLY latency against
-    * the stored artifact (×3 — the steady-state cost), the incremental
-    * addVectors path, and a full rebuild for contrast.
-    *
-    *   sbt "runMain graft.tools.ScaleProbe 100 annindex"
-    */
-  private def annIndexProbe(spark: SparkSession, factor: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.{AnnIndexStore, Similarity}
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"""{"probe":"$name","wall_sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
-      r
-    }
-    val par = spark.sparkContext.defaultParallelism
-    val emb0 = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-    // replicate with an alternating per-component perturbation so replicas
-    // spread over lists instead of stacking on their original's centroid
-    val corpus = (0 until factor).map(i => emb0.select(
-      (col("vec_id") + lit(i.toLong * 1000000L)).as("c_id"),
-      transform(col("embedding"), (x, j) =>
-        x * (lit(1.0f) + lit(0.002f * (i % 40)) *
-          when(pmod(j + lit(i), lit(2)) === 0, lit(1.0f)).otherwise(lit(-1.0f))))
-        .as("c_vec")))
-      .reduce(_ unionByName _).repartition(par).cache()
-    println(s"""{"probe":"ann_corpus","vectors":${corpus.count()}}""")
-    val queries = emb0.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val dir = Files.createTempDirectory("annprobe").toString
-
-    val (ivf, pq) = timed("annindex_build") {
-      (Similarity.buildIvf(corpus, "c_id", "c_vec", k = 16, iters = 2),
-        Similarity.buildPq(corpus, "c_id", "c_vec", m = 16, k = 16, iters = 2))
-    }
-    timed("annindex_save")(AnnIndexStore.save(spark, dir, ivf, pq))
-    val loaded = timed("annindex_load")(AnnIndexStore.load(spark, dir))
-    (1 to 3).foreach { i =>
-      timed(s"annindex_search_stored_$i") {
-        AnnIndexStore.searchTopK(loaded, queries, "c_id", "c_vec",
-          "q_id", "q_vec", k = 5, rerank = 50).collect()
-      }
-    }
-    // incremental growth: one original-corpus-worth of new ids (1/factor
-    // of the indexed rows) — must cost O(increment), not O(index)
-    val inc = emb0.select(
-      (col("vec_id") + lit(factor.toLong * 1000000L)).as("c_id"),
-      col("embedding").as("c_vec"))
-    timed("annindex_add_vectors")(
-      AnnIndexStore.addVectors(spark, dir, inc, "c_id", "c_vec"))
-    val grown = timed("annindex_reload")(AnnIndexStore.load(spark, dir))
-    timed("annindex_search_grown") {
-      AnnIndexStore.searchTopK(grown, queries, "c_id", "c_vec",
-        "q_id", "q_vec", k = 5, rerank = 50).collect()
-    }
-    // contrast: what every search paid before persistence (the x24 shape)
-    timed("annindex_full_rebuild") {
-      val all = corpus.unionByName(inc)
-      (Similarity.buildIvf(all, "c_id", "c_vec", k = 16, iters = 2),
-        Similarity.buildPq(all, "c_id", "c_vec", m = 16, k = 16, iters = 2))
-    }
-    // deletion lifecycle: tombstone 1/factor of the index (one
-    // original-corpus-worth of ids), search through the tombstone
-    // anti-join, then purge. Delete must cost O(deletes); purge must
-    // cost O(touched lists), and the post-purge search pays NO
-    // tombstone join at all.
-    val delIds = corpus.filter(col("c_id") < 1000000L).select(col("c_id"))
-    timed("annindex_delete_vectors")(
-      AnnIndexStore.deleteVectors(spark, dir, delIds, "c_id"))
-    val tombstoned = timed("annindex_reload_tombstoned")(AnnIndexStore.load(spark, dir))
-    timed("annindex_search_tombstoned") {
-      AnnIndexStore.searchTopK(tombstoned, queries, "c_id", "c_vec",
-        "q_id", "q_vec", k = 5, rerank = 50).collect()
-    }
-    timed("annindex_purge_deleted")(AnnIndexStore.purgeDeleted(spark, dir))
-    val purged = timed("annindex_reload_purged")(AnnIndexStore.load(spark, dir))
-    timed("annindex_search_purged") {
-      AnnIndexStore.searchTopK(purged, queries, "c_id", "c_vec",
-        "q_id", "q_vec", k = 5, rerank = 50).collect()
-    }
-    corpus.unpersist()
-  }
-
-  /** Persisted-inverted-index probe (the x24b treatment for x46b):
-    * attribute the lexical build-once/search-many split on a
-    * factor×-replicated document corpus. Reports index build,
-    * SEARCH-ONLY latency against the stored postings (×3 — steady
-    * state, bucket-pruned), the incremental addDocuments path, the
-    * delete→purge lifecycle, and the on-the-fly [[Terms.bm25TopK]] for
-    * contrast (what every search pays without the index).
-    *
-    *   sbt "runMain graft.tools.ScaleProbe 200 lexindex"
-    */
-  private def lexIndexProbe(spark: SparkSession, factor: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.{LexIndexStore, Terms}
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"""{"probe":"$name","wall_sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
-      r
-    }
-    val par = spark.sparkContext.defaultParallelism
-    val docs0 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      .select("doc_id", "text")
-    // suffix-perturbed replication (the dedupProbe recipe): replicas stay
-    // realistic BM25 corpus members without being byte-identical
-    val corpus = (0 until factor).map(i => docs0.select(
-      (col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-      (if (i == 0) col("text")
-       else concat(col("text"), lit(" v" + i))).as("text")))
-      .reduce(_ unionByName _).repartition(par).cache()
-    println(s"""{"probe":"lex_corpus","docs":${corpus.count()}}""")
-    val queries = spark.createDataFrame(Seq(
-      (1L, "hash join"), (2L, "window merge sort"),
-      (3L, "spark stream vector"), (4L, "customer zzzunseen")))
-      .toDF("query_id", "qtext")
-    val dir = Files.createTempDirectory("lexprobe").toString
-
-    timed("lexindex_build")(
-      LexIndexStore.build(spark, dir, corpus, "doc_id", "text", nBuckets = 64))
-    (1 to 3).foreach { i =>
-      timed(s"lexindex_search_stored_$i") {
-        LexIndexStore.searchTopK(spark, dir, queries,
-          "query_id", "qtext", k = 5).collect()
-      }
-    }
-    // incremental growth: one original-corpus-worth of new ids (1/factor
-    // of the indexed rows) — must cost O(increment), not O(index)
-    val inc = docs0.select(
-      (col("doc_id") + lit(factor.toLong * 1000000L)).as("doc_id"),
-      concat(col("text"), lit(" grown")).as("text"))
-    timed("lexindex_add_documents")(
-      LexIndexStore.addDocuments(spark, dir, inc, "doc_id", "text"))
-    timed("lexindex_search_grown") {
-      LexIndexStore.searchTopK(spark, dir, queries,
-        "query_id", "qtext", k = 5).collect()
-    }
-    // deletion lifecycle: tombstone one original-corpus-worth, search
-    // through the tombstone anti-join, purge (touched buckets only),
-    // search clean
-    val delIds = corpus.filter(col("doc_id") < 1000000L).select("doc_id")
-    timed("lexindex_delete_documents")(
-      LexIndexStore.deleteDocuments(spark, dir, delIds, "doc_id"))
-    timed("lexindex_search_tombstoned") {
-      LexIndexStore.searchTopK(spark, dir, queries,
-        "query_id", "qtext", k = 5).collect()
-    }
-    timed("lexindex_purge_deleted")(LexIndexStore.purgeDeleted(spark, dir))
-    timed("lexindex_search_purged") {
-      LexIndexStore.searchTopK(spark, dir, queries,
-        "query_id", "qtext", k = 5).collect()
-    }
-    // contrast: the x46 on-the-fly path over the same (grown) corpus
-    timed("lexindex_live_bm25_contrast") {
-      Terms.bm25TopK(corpus.unionByName(inc), "doc_id", "text",
-        queries, "query_id", "qtext", k = 5).collect()
-    }
-    corpus.unpersist()
-  }
-
-  /** Manifest-log probe (round-7 directive #3 evidence): `n` single-file
-    * appends to one manifest table; per-commit record bytes must stay
-    * O(delta) — flat — while the FULL file list grows linearly (what every
-    * commit paid before the delta log). Prints first/median/last record
-    * size and the hypothetical full-list size at the end.
-    *
-    *   sbt "runMain graft.tools.ScaleProbe 100 manifestlog"
-    */
-  private def manifestLogProbe(spark: SparkSession, n: Int): Unit = {
-    import spark.implicits._
-    val root = Files.createTempDirectory("mlprobe").toString
-    val path = s"$root/events"
-    val engine = new graft.sinks.ManifestMergeEngine(retainVersions = 3)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(path, "_manifests")
-    val t0 = System.nanoTime()
-    val sizes = (0 until n).flatMap { i =>
-      engine.append(path, Seq((i.toLong, s"payload$i")).toDF("id", "payload"))
-      val d = new org.apache.hadoop.fs.Path(dir, s"d$i.json")
-      if (fs.exists(d)) Some(fs.getFileStatus(d).getLen) else None // v0 folds into m0
-    }
-    val wall = (System.nanoTime() - t0) / 1e9
-    val m = engine.read(spark, path).get
-    val rows = m.count()
-    // hypothetical full-list cost: what every commit wrote before the
-    // delta log (reconstruct the current list from the data dir itself)
-    def walk(d: org.apache.hadoop.fs.Path, prefix: String): Seq[String] =
-      fs.listStatus(d).toSeq.flatMap { st =>
-        val rel = if (prefix.isEmpty) st.getPath.getName else s"$prefix/${st.getPath.getName}"
-        if (st.isDirectory) walk(st.getPath, rel) else Seq(rel)
-      }
-    val fullListBytes = walk(new org.apache.hadoop.fs.Path(path, "data"), "")
-      .map(_.length + 1L).sum
-    // n=1 leaves no deltas (d0 folds into the m0 checkpoint immediately)
-    val sorted = if (sizes.nonEmpty) sizes.sorted else Seq(0L)
-    println(s"""{"probe":"manifest_log","commits":$n,"rows":$rows,""" +
-      s""""delta_bytes_first":${sorted.head},"delta_bytes_median":${sorted(sorted.length / 2)},""" +
-      s""""delta_bytes_max":${sorted.last},"full_list_bytes_at_end":$fullListBytes,""" +
-      f""""wall_sec":$wall%.1f}""")
-    require(rows == n, s"expected $n rows, read $rows")
-  }
-
-  /** Pack/terms-family probe: sf0.1 documents replicated `factor`× with
-    * disjoint doc-id ranges (single-plan crossJoin replication — a
-    * 1000-way union would bloat the logical plan). Times the distributed
-    * pack (cumsum + span explode), the incremental continuation (must be
-    * O(increment), not O(packed corpus)), vocab top-k and TF-IDF over
-    * the exploded token stream, and contrasts [[graft.operators.Prefix]]'s
-    * distributed prefix sum against the naive single-partition global
-    * window at the same row count — the committed evidence for the
-    * x36/x39/x40 scale posture.
-    *
-    *   sbt "runMain graft.tools.ScaleProbe 200 pack"
-    */
-  /** Group-wise prefix-sum probe (x55 evidence): `n`M rows, 90% in ONE
-    * key — the skew that pins a `sum() OVER (PARTITION BY key)` window's
-    * dominant partition on a single task. Times
-    * [[graft.operators.Prefix.cumsumLongByKey]] (range-partitioned, the
-    * dominant key SPANS partitions) against the window formulation on
-    * the same frame.
-    *
-    *   sbt "runMain graft.tools.ScaleProbe 5 cumsumkey"
-    */
-  private def cumsumKeyProbe(spark: SparkSession, millions: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"""{"probe":"$name","wall_sec":${(System.nanoTime() - t0) / 1e9}%.1f}""")
-      r
-    }
-    val n = millions.toLong * 1000000L
-    val df = spark.range(n).select(col("id"),
-        when(pmod(col("id"), lit(10)) < 9, lit("dominant"))
-          .otherwise(concat(lit("k"), pmod(col("id"), lit(97)))).as("k"),
-        pmod(col("id"), lit(13)).as("v"))
-      .localCheckpoint(true)
-    println(s"""{"probe":"cumsumkey_rows","n":$n}""")
-    timed("cumsumkey_distributed") {
-      graft.operators.Prefix.cumsumLongByKey(df, "k", Seq(col("id")), "v", "cum")
-        .agg(max(col("cum"))).collect()
-    }
-    timed("cumsumkey_window") {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("k").orderBy("id")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      df.withColumn("cum", sum(col("v")).over(w))
-        .agg(max(col("cum"))).collect()
-    }
-    graft.operators.Dedup.releaseLocalCheckpoint(df)
-  }
-
-  private def packProbe(spark: SparkSession, factor: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.{Pack, Prefix, Terms}
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"""{"probe":"$name","wall_sec":${(System.nanoTime() - t0) / 1e9}%.1f}""")
-      r
-    }
-    val par = spark.sparkContext.defaultParallelism
-    val docs0 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      .select("doc_id", "text")
-    val docs = docs0
-      .crossJoin(spark.range(factor).select(col("id").as("rep")))
-      .select((col("doc_id") + col("rep") * 10000000L).as("doc_id"),
-        col("text"))
-      .repartition(par).cache()
-    println(s"""{"probe":"pack_docs","n":${docs.count()}}""")
-    timed("pack_sequences") {
-      Pack.packSequences(docs, "doc_id", "text", budget = 2048).count()
-    }
-    // incremental continuation: bootstrap the state with the full corpus,
-    // then pack ONE replica more — the increment must not re-pay the corpus
-    val state = Files.createTempDirectory("packprobe").toString
-    timed("pack_incremental_bootstrap") {
-      Pack.packIncremental(docs, "doc_id", "text", 2048, state).count()
-    }
-    val inc = docs0.select(
-      (col("doc_id") + lit(factor.toLong * 10000000L)).as("doc_id"),
-      col("text"))
-    timed("pack_incremental_one_replica") {
-      Pack.packIncremental(inc, "doc_id", "text", 2048, state).count()
-    }
-    timed("vocab_topk") {
-      Terms.vocabTopK(docs, "doc_id", "text", k = 100).collect()
-    }
-    timed("tfidf_topterms") {
-      Terms.tfidfTopTerms(docs, "doc_id", "text", k = 3).count()
-    }
-    // prefix-sum contrast at 50M rows (independent of factor — at 1M the
-    // single-partition window actually WINS, one task sorting 1M longs is
-    // trivial; the naive formulation's failure is the one-partition
-    // memory/parallelism ceiling, which needs row counts that saturate a
-    // task to show up in wall time)
-    val nums = spark.range(50000000L).select(col("id"),
-      (pmod(col("id"), lit(97)) + 1).cast("long").as("v"))
-      .repartition(par).cache()
-    println(s"""{"probe":"cumsum_rows","n":${nums.count()}}""")
-    // agg(max(c)), NOT count(): count lets Catalyst prune the unused
-    // cumsum column and skip the window entirely — the naive side would
-    // report the cost of counting the cache
-    timed("cumsum_distributed") {
-      Prefix.cumsumLong(nums, Seq("id"), "v", "c")
-        .agg(max(col("c"))).collect()
-    }
-    timed("cumsum_naive_single_partition") {
-      nums.withColumn("c", sum(col("v")).over(
-        org.apache.spark.sql.expressions.Window.orderBy("id")
-          .rowsBetween(Long.MinValue, 0)))
-        .agg(max(col("c"))).collect()
-    }
-    docs.unpersist(); nums.unpersist()
-  }
-
-  /** BPE training probe (round-8 directive #1 evidence): the corpus-sized
-    * work is ONE pre-tokenize pass into the word-frequency table; every
-    * merge round after that is a map + one partial-agg exchange over the
-    * VOCABULARY-sized table. Synthesizes a ~50k-distinct-word corpus (the
-    * testdata's documents carry only 31 distinct pre-tokens — too small to
-    * expose per-round cost), then shows (a) rounds are cheap and flat:
-    * train(24 merges) − train(8 merges) ≈ 2 extra rounds of small delta;
-    * (b) doubling the CORPUS moves only the first-pass cost, not the
-    * per-round cost (same vocabulary).
-    *
-    *   sbt "runMain graft.tools.ScaleProbe 1000000 bpe"
-    */
-  private def bpeProbe(spark: SparkSession, nDocs: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.Bpe
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"""{"probe":"$name","wall_sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
-      r
-    }
-    val par = spark.sparkContext.defaultParallelism
-    def corpus(rows: Long) = spark.range(rows).select(
-      col("id").as("doc_id"),
-      concat_ws(" ", (0 until 16).map(k =>
-        conv(pmod(xxhash64(col("id") * lit(k + 1) + lit(k)), lit(50000L)) + lit(1),
-          10, 36)): _*).as("text"))
-      .repartition(par)
-    val c1 = corpus(nDocs.toLong).cache()
-    println(s"""{"probe":"bpe_docs","n":${c1.count()}}""")
-    val words = timed("bpe_wordcounts_pass") {
-      Bpe.wordCounts(c1, "text").count()
-    }
-    println(s"""{"probe":"bpe_distinct_words","n":$words}""")
-    timed("bpe_train_8merges_1round") {
-      Bpe.train(c1, "text", numMerges = 8, mergesPerRound = 8).merges.count()
-    }
-    timed("bpe_train_24merges_3rounds") {
-      Bpe.train(c1, "text", numMerges = 24, mergesPerRound = 8).merges.count()
-    }
-    timed("bpe_train_24merges_sequential") {
-      Bpe.train(c1, "text", numMerges = 24, mergesPerRound = 1).merges.count()
-    }
-    val c2 = corpus(2L * nDocs).cache()
-    println(s"""{"probe":"bpe_docs_2x","n":${c2.count()}}""")
-    timed("bpe_train_24merges_3rounds_2xcorpus") {
-      Bpe.train(c2, "text", numMerges = 24, mergesPerRound = 8).merges.count()
-    }
-    c1.unpersist(); c2.unpersist()
-  }
-
-  /** Shared probe timer for the round-11 probe modes: one JSON line
-    * per stage, factor carried so multi-factor runs are self-labeling.
+  /** The one probe timer: one JSON line per stage, factor carried so
+    * multi-factor runs are self-labeling.
     */
   private def timedJson[T](name: String, factor: Int)(f: => T): T = {
     val t0 = System.nanoTime()
@@ -653,142 +31,18 @@ object ScaleProbe {
     r
   }
 
-  /** Data-dominated-regime probe (round-11 directive #2): the 10×/20×
-    * curation probes showed near-flat walls — fixed overheads still
-    * dominated, so the claimed scaling exponents were untested where
-    * they matter. This mode pushes four families to corpus sizes where
-    * wall clearly grows with data (factor 100 ≈ 500k docs / 200k
-    * vectors off sf0.1) and is run at TWO factors so BASELINE.md can
-    * record measured exponents (log wall-ratio / log size-ratio).
-    * Quality invariants print alongside every wall so a fast-but-wrong
-    * scale-up can't read as a win.
-    *
-    *   sbt "runMain graft.tools.ScaleProbe 100 datadom"
-    *   sbt "runMain graft.tools.ScaleProbe 200 datadom"
+  /** Lands `df` as ONE parquet file `srcDir/name`: written in a scratch
+    * temp directory, then renamed into `srcDir` (also a temp directory), so
+    * the file-stream source never lists a half-written file.
     */
-  private def datadomProbe(spark: SparkSession, factor: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.{Classifier, Dedup}
-    def timed[T](name: String)(f: => T): T = timedJson(name, factor)(f)
-    val par = spark.sparkContext.defaultParallelism
-    val docs0 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      .select("doc_id", "text")
-    val docs = (0 until factor).map(i => docs0.select(
-      (col("doc_id") + lit(i * 1000000L)).as("doc_id"), col("text")))
-      .reduce(_ unionByName _).repartition(par).cache()
-    // ---- classifier: train is LABELED-SLICE-bound (fixed 10k docs at
-    // every factor — curation practice), score is the corpus-bound
-    // map-only half whose exponent this probe measures
-    val spamText = " click here buy now free offer limited prize winner " +
-      "cheap deal subscribe click here buy now free offer"
-    val labeled = docs.select(col("doc_id"),
-        when(pmod(col("doc_id"), lit(3)) === 0, concat(col("text"), lit(spamText)))
-          .otherwise(col("text")).as("text"),
-        when(pmod(col("doc_id"), lit(3)) === 0, lit(0.0)).otherwise(lit(1.0))
-          .as("label"))
-      .cache()
-    println(s"""{"probe":"corpus","factor":$factor,"docs":${labeled.count()}}""")
-    val trainSlice = labeled.filter(col("doc_id") < 10000)
-    val model = timed("dd_classifier_train_fixed_slice") {
-      Classifier.trainQualityLr(trainSlice, "doc_id", "text", "label",
-        dim = 2048, iters = 10, lr = 1600.0)
-    }
-    timed("dd_classifier_score_all") {
-      val scored = Classifier.score(labeled, "doc_id", "text", model)
-        .join(labeled.select(col("doc_id"), col("label")), "doc_id")
-      val sep = scored.filter(col("doc_id") >= 10000)
-        .groupBy("label")
-        .agg(min("quality_score").as("mn"), max("quality_score").as("mx"))
-        .orderBy("label").collect()
-      println(s"""{"probe":"dd_classifier_heldout","factor":$factor,"spam_max":${sep(0).getDouble(2)},"clean_min":${sep(1).getDouble(1)}}""")
-    }
-    // ---- containment decontamination: 100 benchmark prompts against
-    // the full replicated corpus; every replica must surface
-    timed("dd_containment_13gram") {
-      val bench = docs0.filter(col("doc_id") < 100).select(
-        (col("doc_id") + 5000000L).as("bench_id"),
-        expr("substring(text, greatest(length(text) - 399, 1), 400)").as("prompt"))
-      val hits = Dedup.containmentDecontaminate(labeled.select("doc_id", "text"),
-        "doc_id", "text", bench, "bench_id", "prompt", n = 13, minRatio = 0.9)
-      println(s"""{"probe":"dd_containment_pairs","factor":$factor,"n":${hits.count()},"expect_min":${100 * factor}}""")
-    }
-    labeled.unpersist()
-    docs.unpersist()
-    // ---- semDeDup: factor× EXACT copies of the base vectors — every
-    // base vector fans into a factor-sized identical group, so the
-    // clean invariant dropped ≈ n − n_base holds at any factor (modulo
-    // borderline base-vector pairs the 0.999 gate merges)
-    val emb0 = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val nBase = emb0.count()
-    val emb = (0 until factor).map(i => emb0.select(
-      (col("vec_id") + lit(i * 10000000L)).as("vec_id"), col("embedding")))
-      .reduce(_ unionByName _).repartition(par).cache()
-    println(s"""{"probe":"dd_vectors","factor":$factor,"n":${emb.count()}}""")
-    timed("dd_semdedup") {
-      val out = Dedup.semDeDup(emb, "vec_id", "embedding",
-        nClusters = 64, minCos = 0.999, iters = 2)
-      val dropped = out.filter(!col("keep")).count()
-      println(s"""{"probe":"dd_semdedup_verdicts","factor":$factor,"dropped":$dropped,"expect_min":${(factor - 1) * nBase}}""")
-    }
-    // same corpus through the OVERSIZE-RECURSION path (round 11): a
-    // 2000-row cap forces every ~3125-row cluster to refine one level;
-    // identical copies always share a leaf, so the drop invariant must
-    // survive refinement — and the wall prices the recursion at scale
-    timed("dd_semdedup_recursive_cap2000") {
-      val out = Dedup.semDeDup(emb, "vec_id", "embedding",
-        nClusters = 64, minCos = 0.999, iters = 2, maxCluster = 2000,
-        refineBranch = 8, refineDepth = 3)
-      val dropped = out.filter(!col("keep")).count()
-      val unpaired = out.filter(!col("paired")).count()
-      println(s"""{"probe":"dd_semdedup_recursive_verdicts","factor":$factor,"dropped":$dropped,"unpaired":$unpaired,"expect_min":${(factor - 1) * nBase}}""")
-    }
-    emb.unpersist()
-    // ---- streaming dedup, dup-LIGHT (the web-corpus shape): unique
-    // word-salad docs with ~1% planted exact-dup pairs split across
-    // arrival batches — per-batch wall scales with the INCREMENT (the
-    // batch), not the accumulated state; run at two factors this
-    // measures the increment exponent, not the clique worst case the
-    // `dedup` probe deliberately stresses
-    val nDocs = factor * 5000L
-    val vocab = (0 until 1024).map(i => f"w$i%04d")
-    val synth = spark.range(nDocs).select(col("id").as("doc_id"),
-      concat_ws(" ", (0 until 48).map(j =>
-        element_at(typedlit(vocab),
-          (pmod(xxhash64(
-            when(pmod(col("id"), lit(100)) === 99, col("id") - 99)
-              .otherwise(col("id")) * 48 + j), lit(1024)) + 1).cast("int"))): _*)
-        .as("text"))
-      .repartition(par).cache()
-    println(s"""{"probe":"dd_synth_docs","factor":$factor,"n":${synth.count()}}""")
-    timed("dd_streaming_dedup_5_batches") {
-      val base = Files.createTempDirectory("ddprobe").toString
-      val src = s"$base/src"
-      new java.io.File(src).mkdirs()
-      def land(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-        val tmp = Files.createTempDirectory("ddarr").toString
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-        Files.move(part.toPath, Paths.get(s"$src/$name"))
-      }
-      val q = Dedup.streamingMinhashDedup(spark, src, synth.schema,
-        s"$base/state", s"$base/pairs", s"$base/ckpt", "doc_id", "text",
-        compactEvery = 4)
-      try {
-        (0 until 5).foreach { i =>
-          val b0 = System.nanoTime()
-          land(synth.filter(pmod(col("doc_id"), lit(5)) === i), f"a$i.parquet")
-          q.processAllAvailable()
-          println(f"""{"probe":"dd_streaming_batch","factor":$factor,"i":$i,"wall_sec":${(System.nanoTime() - b0) / 1e9}%.1f}""")
-        }
-      } finally q.stop()
-      // planted (k·100, k·100+99) pairs land in batches 0 and 4 — every
-      // one must cross the batch boundary through the persisted state
-      println(s"""{"probe":"dd_streaming_pairs","factor":$factor,"n":${
-        spark.read.parquet(s"$base/pairs").dropDuplicates("a_id", "b_id").count()},"expect_min":${nDocs / 100}}""")
-    }
-    synth.unpersist()
+  private def land(df: DataFrame, srcDir: String, name: String): Unit = {
+    val tmp = Files.createTempDirectory("dd6_land").toString
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .find(f => f.getName.startsWith("part-") &&
+        f.getName.endsWith(".parquet")).get
+    Files.move(part.toPath, Paths.get(s"$srcDir/$name"))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
   }
 
   /** Data-dominated probe, round 12 (verdict directive #3): BM25 and the
@@ -808,7 +62,6 @@ object ScaleProbe {
   private def datadom2Probe(spark: SparkSession, factor: Int): Unit = {
     import org.apache.spark.sql.functions._
     import graft.operators.{Bpe, LexIndexStore, WordPiece}
-    def timed[T](name: String)(f: => T): T = timedJson(name, factor)(f)
     val par = spark.sparkContext.defaultParallelism
     // word-salad corpus with a rare term planted in EXACTLY 20 known
     // docs (ids ≡ 7 mod nDocs/20): the retrieval invariant — top-k for
@@ -826,18 +79,18 @@ object ScaleProbe {
     println(s"""{"probe":"dd2_corpus","factor":$factor,"docs":${docs.count()}}""")
     val base = Files.createTempDirectory("dd2probe").toString
     val dir = s"$base/lexidx"
-    timed("dd2_lex_build") {
+    timedJson("dd2_lex_build", factor) {
       LexIndexStore.build(spark, dir, docs, "doc_id", "text", nBuckets = 64)
     }
     val queries = spark.createDataFrame(Seq(
       (1L, s"${vocab(17)} ${vocab(901)}"), (2L, s"${vocab(3)} ${vocab(512)} ${vocab(777)}"),
       (3L, vocab(256)), (4L, s"${vocab(64)} zzabsent"))).toDF("query_id", "qtext")
-    timed("dd2_lex_search_batch") {
+    timedJson("dd2_lex_search_batch", factor) {
       val n = LexIndexStore.searchTopK(spark, dir, queries,
         "query_id", "qtext", k = 10).count()
       println(s"""{"probe":"dd2_lex_search_rows","factor":$factor,"n":$n}""")
     }
-    timed("dd2_lex_search_rare") {
+    timedJson("dd2_lex_search_rare", factor) {
       val rare = spark.createDataFrame(Seq((9L, "zzrareterm")))
         .toDF("query_id", "qtext")
       val got = LexIndexStore.searchTopK(spark, dir, rare,
@@ -847,7 +100,7 @@ object ScaleProbe {
       println(s"""{"probe":"dd2_lex_rare_invariant","factor":$factor,"n":${got.size},"all_planted":$ok}""")
       require(ok, s"rare-term search missed planted docs: $got")
     }
-    timed("dd2_lex_add_1pct") {
+    timedJson("dd2_lex_add_1pct", factor) {
       val inc = spark.range(nDocs, nDocs + nDocs / 100).select(
         col("id").as("doc_id"),
         concat_ws(" ", body: _*).as("text"))
@@ -865,12 +118,12 @@ object ScaleProbe {
       .reduce(_ unionByName _).repartition(par).cache()
     println(s"""{"probe":"dd2_tok_corpus","factor":$factor,"docs":${tcorpus.count()}}""")
     Seq(24, 240).foreach { m =>
-      timed(s"dd2_bpe_train_$m") {
+      timedJson(s"dd2_bpe_train_$m", factor) {
         val merges = Bpe.train(tcorpus, "text", numMerges = m,
           mergesPerRound = 8).merges.collect()
         println(s"""{"probe":"dd2_bpe_merges","factor":$factor,"want":$m,"got":${merges.length}}""")
       }
-      timed(s"dd2_wp_train_$m") {
+      timedJson(s"dd2_wp_train_$m", factor) {
         val model = WordPiece.train(tcorpus, "text", numMerges = m,
           mergesPerRound = 8)
         println(s"""{"probe":"dd2_wp_merges","factor":$factor,"want":$m,"got":${model.merges.count()},"vocab":${model.vocab.count()}}""")
@@ -883,169 +136,16 @@ object ScaleProbe {
     // isolates the per-ROUND cost the vocabulary prices: 24 vs 88
     // rounds (88 stays under this corpus's ~90-merge pair exhaustion)
     Seq(24, 88).foreach { m =>
-      timed(s"dd2_bpe_seq_$m") {
+      timedJson(s"dd2_bpe_seq_$m", factor) {
         Bpe.train(tcorpus, "text", numMerges = m, mergesPerRound = 1)
           .merges.count()
       }
-      timed(s"dd2_wp_seq_$m") {
+      timedJson(s"dd2_wp_seq_$m", factor) {
         WordPiece.train(tcorpus, "text", numMerges = m, mergesPerRound = 1)
           .merges.count()
       }
     }
     tcorpus.unpersist()
-  }
-
-  /** Index-lifecycle CHURN probe (round-11 directive #8): the annindex/
-    * lexindex probes run each lifecycle op once, in order — real ingest
-    * interleaves them. This mode drives both stores through
-    * add → delete → add → purge → add → delete → purge cycles at probe
-    * scale (factor 100 ⇒ 200k vectors + 1M docs) and pins SEARCH PARITY
-    * after EVERY step: the ANN side against a frozen-model in-memory
-    * re-encode of exactly the live rows (byte-equal results — the
-    * stored layout, tombstones, partial purges and meta are what's
-    * under test), the lexical side against the on-the-fly
-    * [[graft.operators.Terms.bm25TopK]] over the live corpus. Catches
-    * tombstone/meta drift that single-pass probes cannot.
-    *
-    *   sbt "runMain graft.tools.ScaleProbe 100 churn"
-    */
-  private def churnProbe(spark: SparkSession, factor: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.{AnnIndexStore, LexIndexStore, Similarity, Terms}
-    import graft.operators.Similarity.{IvfIndex, PqModel}
-    def timed[T](name: String)(f: => T): T = timedJson(name, factor)(f)
-    val par = spark.sparkContext.defaultParallelism
-
-    // ---------- ANN half: factor× vectors (100 ⇒ 200k) ----------
-    val emb0 = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-    def annSlice(lo: Int, hi: Int) = (lo until hi).map(i => emb0.select(
-      (col("vec_id") + lit(i.toLong * 1000000L)).as("c_id"),
-      transform(col("embedding"), (x, j) =>
-        x * (lit(1.0f) + lit(0.002f * (i % 40)) *
-          when(pmod(j + lit(i), lit(2)) === 0, lit(1.0f)).otherwise(lit(-1.0f))))
-        .as("c_vec")))
-      .reduce(_ unionByName _)
-    val queries = emb0.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val f6 = factor * 6 / 10; val f7 = factor * 75 / 100
-    val f8 = factor * 85 / 100
-    val annBase = annSlice(0, f6).repartition(par).cache()
-    println(s"""{"probe":"churn_ann_base","factor":$factor,"vectors":${annBase.count()}}""")
-    val dir = Files.createTempDirectory("churnann").toString
-    val (ivf, pq) = timed("churn_ann_build") {
-      (Similarity.buildIvf(annBase, "c_id", "c_vec", k = 16, iters = 2),
-        Similarity.buildPq(annBase, "c_id", "c_vec", m = 16, k = 16, iters = 2))
-    }
-    AnnIndexStore.save(spark, dir, ivf, pq)
-    // live-set of record, mirrored through every churn step
-    var live = annBase
-    def annParity(step: String): Unit = timed(s"churn_ann_parity_$step") {
-      val loaded = AnnIndexStore.load(spark, dir)
-      val stored = AnnIndexStore.searchTopK(loaded, queries,
-        "c_id", "c_vec", "q_id", "q_vec", k = 5, rerank = 50)
-        .collect().map(_.toString).sorted.toSeq
-      // frozen-model re-encode of exactly the live rows — the reference
-      // the stored layout must reproduce byte-for-byte
-      val aRef = Similarity.assignCid(live.select(col("c_id"), col("c_vec")),
-        "c_vec", loaded.ivf.centroids)
-      val eRef = Similarity.pqEncode(live, "c_id", "c_vec",
-        loaded.pq.codebooks, loaded.pq.m, loaded.pq.k)
-      val ref = AnnIndexStore.PersistedAnnIndex(
-        IvfIndex(loaded.ivf.centroids, aRef),
-        PqModel(loaded.pq.codebooks, loaded.pq.m, loaded.pq.k, eRef),
-        eRef.join(aRef.select("c_id", "cid"), "c_id"))
-      val mem = AnnIndexStore.searchTopK(ref, queries,
-        "c_id", "c_vec", "q_id", "q_vec", k = 5, rerank = 50)
-        .collect().map(_.toString).sorted.toSeq
-      val ok = stored == mem
-      println(s"""{"probe":"churn_ann_parity","factor":$factor,"step":"$step","match":$ok,"rows":${stored.size}}""")
-      require(ok, s"ANN churn parity broke at step $step")
-    }
-    annParity("base")
-    // cycle 1: add, delete a mixed slice (oldest rows + some just-added)
-    val inc1 = annSlice(f6, f7).cache()
-    timed("churn_ann_add1")(AnnIndexStore.addVectors(spark, dir, inc1, "c_id", "c_vec"))
-    live = live.unionByName(inc1); annParity("add1")
-    val delPred1 = col("c_id") < 3L * 1000000L ||
-      (col("c_id") >= f6.toLong * 1000000L && col("c_id") < (f6 + 1).toLong * 1000000L)
-    timed("churn_ann_del1")(AnnIndexStore.deleteVectors(spark, dir,
-      live.filter(delPred1).select("c_id"), "c_id"))
-    live = live.filter(!delPred1).cache(); annParity("del1")
-    // cycle 2: add on top of tombstones, THEN purge, then delete again
-    val inc2 = annSlice(f7, f8).cache()
-    timed("churn_ann_add2")(AnnIndexStore.addVectors(spark, dir, inc2, "c_id", "c_vec"))
-    live = live.unionByName(inc2); annParity("add2")
-    timed("churn_ann_purge1")(AnnIndexStore.purgeDeleted(spark, dir))
-    annParity("purge1")
-    val delPred2 = col("c_id") >= f7.toLong * 1000000L &&
-      col("c_id") < (f7 + 2).toLong * 1000000L
-    timed("churn_ann_del2")(AnnIndexStore.deleteVectors(spark, dir,
-      live.filter(delPred2).select("c_id"), "c_id"))
-    live = live.filter(!delPred2).cache(); annParity("del2")
-    // cycle 3: add + final purge — adds over live tombstones, then none
-    val inc3 = annSlice(f8, factor).cache()
-    timed("churn_ann_add3")(AnnIndexStore.addVectors(spark, dir, inc3, "c_id", "c_vec"))
-    live = live.unionByName(inc3); annParity("add3")
-    timed("churn_ann_purge2")(AnnIndexStore.purgeDeleted(spark, dir))
-    annParity("purge2")
-    println(s"""{"probe":"churn_ann_final","factor":$factor,"live":${live.count()}}""")
-    annBase.unpersist(); inc1.unpersist(); inc2.unpersist(); inc3.unpersist()
-
-    // ---------- lexical half: 2×factor× docs (100 ⇒ 1M) ----------
-    val lf = factor * 2
-    val docs0 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      .select("doc_id", "text")
-    def lexSlice(lo: Int, hi: Int) = (lo until hi).map(i => docs0.select(
-      (col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-      (if (i == 0) col("text") else concat(col("text"), lit(" v" + i))).as("text")))
-      .reduce(_ unionByName _)
-    val lexQueries = spark.createDataFrame(Seq(
-      (1L, "hash join"), (2L, "window merge sort"),
-      (3L, "spark stream vector"), (4L, "customer zzzunseen")))
-      .toDF("query_id", "qtext")
-    val l6 = lf * 6 / 10; val l7 = lf * 75 / 100; val l8 = lf * 85 / 100
-    val lexBase = lexSlice(0, l6).repartition(par).cache()
-    println(s"""{"probe":"churn_lex_base","factor":$factor,"docs":${lexBase.count()}}""")
-    val ldir = Files.createTempDirectory("churnlex").toString
-    timed("churn_lex_build")(
-      LexIndexStore.build(spark, ldir, lexBase, "doc_id", "text", nBuckets = 64))
-    var liveDocs = lexBase
-    def lexParity(step: String): Unit = timed(s"churn_lex_parity_$step") {
-      val stored = LexIndexStore.searchTopK(spark, ldir, lexQueries,
-        "query_id", "qtext", k = 5).collect().map(_.toString).sorted.toSeq
-      val liveRes = Terms.bm25TopK(liveDocs, "doc_id", "text",
-        lexQueries, "query_id", "qtext", k = 5)
-        .collect().map(_.toString).sorted.toSeq
-      val ok = stored == liveRes
-      println(s"""{"probe":"churn_lex_parity","factor":$factor,"step":"$step","match":$ok,"rows":${stored.size}}""")
-      require(ok, s"lex churn parity broke at step $step")
-    }
-    lexParity("base")
-    val linc1 = lexSlice(l6, l7).cache()
-    timed("churn_lex_add1")(LexIndexStore.addDocuments(spark, ldir, linc1, "doc_id", "text"))
-    liveDocs = liveDocs.unionByName(linc1); lexParity("add1")
-    val ldelPred1 = col("doc_id") < 3L * 1000000L ||
-      (col("doc_id") >= l6.toLong * 1000000L && col("doc_id") < (l6 + 1).toLong * 1000000L)
-    timed("churn_lex_del1")(LexIndexStore.deleteDocuments(spark, ldir,
-      liveDocs.filter(ldelPred1).select("doc_id"), "doc_id"))
-    liveDocs = liveDocs.filter(!ldelPred1).cache(); lexParity("del1")
-    val linc2 = lexSlice(l7, l8).cache()
-    timed("churn_lex_add2")(LexIndexStore.addDocuments(spark, ldir, linc2, "doc_id", "text"))
-    liveDocs = liveDocs.unionByName(linc2); lexParity("add2")
-    timed("churn_lex_purge1")(LexIndexStore.purgeDeleted(spark, ldir))
-    lexParity("purge1")
-    val ldelPred2 = col("doc_id") >= l7.toLong * 1000000L &&
-      col("doc_id") < (l7 + 2).toLong * 1000000L
-    timed("churn_lex_del2")(LexIndexStore.deleteDocuments(spark, ldir,
-      liveDocs.filter(ldelPred2).select("doc_id"), "doc_id"))
-    liveDocs = liveDocs.filter(!ldelPred2).cache(); lexParity("del2")
-    val linc3 = lexSlice(l8, lf).cache()
-    timed("churn_lex_add3")(LexIndexStore.addDocuments(spark, ldir, linc3, "doc_id", "text"))
-    liveDocs = liveDocs.unionByName(linc3); lexParity("add3")
-    timed("churn_lex_purge2")(LexIndexStore.purgeDeleted(spark, ldir))
-    lexParity("purge2")
-    println(s"""{"probe":"churn_lex_final","factor":$factor,"live":${liveDocs.count()}}""")
-    lexBase.unpersist(); linc1.unpersist(); linc2.unpersist(); linc3.unpersist()
   }
 
   /** Data-dominated probe for the round-12 additions — cross-document
@@ -1071,7 +171,6 @@ object ScaleProbe {
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions._
     import graft.operators.{Skew, TextOps}
-    def timed[T](name: String)(f: => T): T = timedJson(name, factor)(f)
     val par = spark.sparkContext.defaultParallelism
     val nDocs = factor * 5000L
     // ---- line-structured corpus: 10 body lines unique to each doc
@@ -1090,7 +189,7 @@ object ScaleProbe {
       .select(col("id").as("doc_id"), concat_ws("\n", lineCols: _*).as("text"))
       .repartition(par).cache()
     println(s"""{"probe":"dd3_corpus","factor":$factor,"docs":${docs.count()}}""")
-    timed("dd3_line_dedup") {
+    timedJson("dd3_line_dedup", factor) {
       val out = TextOps.lineDedup(docs, "doc_id", "text", minDocs = 3)
       val bad = out.filter(col("n_kept") =!= 10 ||
         (col("n_lines") =!= when(pmod(col("doc_id"), lit(100)) === 7, 13)
@@ -1112,7 +211,7 @@ object ScaleProbe {
       .repartition(par).cache()
     println(s"""{"probe":"dd3_seen","factor":$factor,"keys":${seen.count()}}""")
     val mBits = 16L * nDocs
-    timed("dd3_bloom_build") {
+    timedJson("dd3_bloom_build", factor) {
       val n = Skew.bloomBuild(seen, "text", mBits = mBits, k = 5).bits.count()
       println(s"""{"probe":"dd3_bloom_bits","factor":$factor,"set_bits":$n}""")
     }
@@ -1123,7 +222,7 @@ object ScaleProbe {
         concat(lit("novel content number "), col("id")).as("text"))
       .unionByName(seen.filter(col("doc_id") % 97 === 0).limit(nDup.toInt)
         .select((col("doc_id") + 10000000L).as("doc_id"), col("text")))
-    timed("dd3_bloom_ingest_e2e") {
+    timedJson("dd3_bloom_ingest_e2e", factor) {
       val out = Skew.bloomNewIds(seen, increment, "doc_id", "text",
         mBits = mBits, k = 5).cache()
       val dupsFound = out.filter(!col("is_new")).count()
@@ -1151,7 +250,6 @@ object ScaleProbe {
   private def datadom4Probe(spark: SparkSession, factor: Int): Unit = {
     import org.apache.spark.sql.functions._
     import graft.operators.{Similarity, Skew, Terms}
-    def timed[T](name: String)(f: => T): T = timedJson(name, factor)(f)
     val par = spark.sparkContext.defaultParallelism
     // ---- heavy hitters: n = factor×50k items, three planted heavies
     // (30% / 10% / 6%) over a 100k-key light tail — the Zipf head/tail
@@ -1165,7 +263,7 @@ object ScaleProbe {
         .otherwise(concat(lit("tail_"), pmod(col("id"), lit(100000)))).as("item"))
       .repartition(par).cache()
     println(s"""{"probe":"dd4_items","factor":$factor,"items":${items.count()}}""")
-    timed("dd4_heavy_hitters") {
+    timedJson("dd4_heavy_hitters", factor) {
       val got = Skew.heavyHittersExact(items, "item", phi = 0.05)
         .orderBy("item").collect()
         .map(r => (r.getString(0), r.getLong(1)))
@@ -1189,7 +287,7 @@ object ScaleProbe {
       .select(col("id").as("doc_id"), concat_ws(" ", words).as("text"))
       .repartition(par).cache()
     println(s"""{"probe":"dd4_docs","factor":$factor,"docs":${docs.count()}}""")
-    timed("dd4_trigram_kn") {
+    timedJson("dd4_trigram_kn", factor) {
       val out = Terms.trigramKnLogprob(docs, "doc_id", "text").cache()
       val n = out.count()
       val bad = out.filter(col("n_trigrams") =!= 28 ||
@@ -1224,12 +322,12 @@ object ScaleProbe {
         zip_with(rndVec("v", col("id")), rndVec("q", col("id")),
           (b, n) => b + n * 0.05).as("q_vec"))
       .cache()
-    val brute = timed("dd4_brute_scan") {
+    val brute = timedJson("dd4_brute_scan", factor) {
       Similarity.bruteForceTopK(corpus, queries,
         "c_id", "c_vec", "q_id", "q_vec", 5).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     }
-    val twins = timed("dd4_hamming_scan_rerank") {
+    val twins = timedJson("dd4_hamming_scan_rerank", factor) {
       val t = Similarity.hammingTopK(corpus, queries,
         "c_id", "c_vec", "q_id", "q_vec", 5, rerank = 200).cache()
       require(t.count() == 100, "hamming topk shape broke")
@@ -1240,7 +338,7 @@ object ScaleProbe {
     // this is the wall to weigh against dd4_brute_scan
     val packed = Similarity.signPackCorpus(corpus, "c_id", "c_vec").cache()
     packed.count()
-    timed("dd4_hamming_packed_scan") {
+    timedJson("dd4_hamming_packed_scan", factor) {
       val n = Similarity.hammingTopKPacked(packed, corpus, queries,
         "c_id", "c_vec", "q_id", "q_vec", 5, rerank = 200).count()
       require(n == 100, "packed hamming topk shape broke")
@@ -1253,121 +351,6 @@ object ScaleProbe {
     val recall = (brute & got).size.toDouble / brute.size
     println(s"""{"probe":"dd4_hamming_twins","factor":$factor,"twins_at_rank1":$hit,"recall_vs_brute":$recall}""")
     require(hit == 20, s"twin contract broke: $hit/20 at rank 1")
-    corpus.unpersist()
-    queries.unpersist()
-  }
-
-  /** Data-dominated probe, persisted-ANN edition (round-12 verdict ask
-    * #6 — lex got 5M/10M docs in datadom2; the ANN lifecycle probes
-    * stopped at 200k–400k vectors): price the STORED-index lifecycle —
-    * build, save, searchTopK ×3, fixed-size addVectors, delete→purge,
-    * post-purge search — at 1M and 2M hash-random 64-d vectors, plus
-    * the flat-SQ8 codes scan, with the dd4 twin contract riding every
-    * search wall as the exact invariant: 20 noised twins of corpus rows
-    * 0–19 must land at rank 1 through the exact rerank, at every
-    * lifecycle stage, or the probe aborts. Recall vs the brute float
-    * scan is additionally REPORTED (isotropic-random vectors are the
-    * documented weak regime for coarse quantizers — the honest number
-    * belongs on the record; the twin contract is what a dedup/linkage
-    * deployment relies on).
-    *
-    *   sbt "runMain graft.tools.ScaleProbe 400 datadom5"   // 1M vectors
-    *   sbt "runMain graft.tools.ScaleProbe 800 datadom5"   // 2M vectors
-    */
-  private def datadom5Probe(spark: SparkSession, factor: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.{AnnIndexStore, Similarity}
-    def timed[T](name: String)(f: => T): T = timedJson(name, factor)(f)
-    val par = spark.sparkContext.defaultParallelism
-    val nVecs = factor * 2500L
-    def rndVec(seed: String, idc: org.apache.spark.sql.Column) =
-      transform(sequence(lit(0), lit(63)),
-        i => (pmod(xxhash64(lit(seed), idc, i), lit(2001L)) - 1000L) / 1000.0)
-    val corpus = spark.range(nVecs)
-      .select(col("id").as("c_id"), rndVec("v", col("id")).as("c_vec"))
-      .repartition(par).cache()
-    println(s"""{"probe":"dd5_vecs","factor":$factor,"vecs":${corpus.count()}}""")
-    val queries = spark.range(20)
-      .select((col("id") + 9000000L).as("q_id"),
-        zip_with(rndVec("v", col("id")), rndVec("q", col("id")),
-          (b, n) => b + n * 0.05).as("q_vec"))
-      .cache()
-    queries.count()
-    val brute = timed("dd5_brute_scan") {
-      Similarity.bruteForceTopK(corpus, queries,
-        "c_id", "c_vec", "q_id", "q_vec", 5).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
-    // recall vs brute is reported only while the brute ground truth is
-    // CURRENT (pre-growth stages) — after addVectors the true top-5
-    // changes, and recall against a stale set would read as a quality
-    // regression that is actually the metric going stale
-    def requireTwins(stage: String, rows: Array[org.apache.spark.sql.Row],
-        vsBrute: Boolean = true): Unit = {
-      val hit = rows.count(r => r.getInt(3) == 1 &&
-        r.getLong(1) == r.getLong(0) - 9000000L)
-      val recall =
-        if (vsBrute)
-          s""","recall_vs_brute":${(brute &
-            rows.map(r => (r.getLong(0), r.getLong(1))).toSet).size.toDouble / brute.size}"""
-        else ""
-      println(s"""{"probe":"dd5_${stage}_twins","factor":$factor,"twins_at_rank1":$hit$recall}""")
-      require(hit == 20, s"$stage twin contract broke: $hit/20 at rank 1")
-    }
-    val dir = Files.createTempDirectory("dd5_ann").toString + "/idx"
-    // 64 inverted lists: ~nVecs/64 vectors per probed list — the layout
-    // whose pruning factor the searches below are supposed to buy
-    val (ivf, pq) = timed("dd5_build") {
-      (Similarity.buildIvf(corpus, "c_id", "c_vec", k = 64, iters = 2),
-        Similarity.buildPq(corpus, "c_id", "c_vec", m = 16, k = 16, iters = 2))
-    }
-    timed("dd5_save")(AnnIndexStore.save(spark, dir, ivf, pq))
-    val loaded = timed("dd5_load")(AnnIndexStore.load(spark, dir))
-    (1 to 3).foreach { i =>
-      val got = timed(s"dd5_search_stored_$i") {
-        AnnIndexStore.searchTopK(loaded, queries, "c_id", "c_vec",
-          "q_id", "q_vec", k = 5, rerank = 200).collect()
-      }
-      requireTwins(s"search_$i", got)
-    }
-    // fixed-size increment (20k vectors — SAME size at both factors, so
-    // the wall exposes any hidden corpus dependence; ids disjoint)
-    val inc = spark.range(20000)
-      .select((col("id") + 50000000L).as("c_id"), rndVec("a", col("id")).as("c_vec"))
-    timed("dd5_add_vectors")(
-      AnnIndexStore.addVectors(spark, dir, inc, "c_id", "c_vec"))
-    val grown = timed("dd5_reload_grown")(AnnIndexStore.load(spark, dir))
-    requireTwins("search_grown", timed("dd5_search_grown") {
-      AnnIndexStore.searchTopK(grown, queries, "c_id", "c_vec",
-        "q_id", "q_vec", k = 5, rerank = 200).collect()
-    }, vsBrute = false)
-    // fixed-size delete (20k stored ids away from the twins) → tombstoned
-    // search → purge (O(touched lists)) → post-purge search
-    val delIds = spark.range(500000L, 520000L).select(col("id").as("c_id"))
-    timed("dd5_delete_vectors")(
-      AnnIndexStore.deleteVectors(spark, dir, delIds, "c_id"))
-    val tomb = timed("dd5_reload_tombstoned")(AnnIndexStore.load(spark, dir))
-    requireTwins("search_tombstoned", timed("dd5_search_tombstoned") {
-      AnnIndexStore.searchTopK(tomb, queries, "c_id", "c_vec",
-        "q_id", "q_vec", k = 5, rerank = 200).collect()
-    }, vsBrute = false)
-    timed("dd5_purge_deleted")(AnnIndexStore.purgeDeleted(spark, dir))
-    val purged = timed("dd5_reload_purged")(AnnIndexStore.load(spark, dir))
-    requireTwins("search_purged", timed("dd5_search_purged") {
-      AnnIndexStore.searchTopK(purged, queries, "c_id", "c_vec",
-        "q_id", "q_vec", k = 5, rerank = 200).collect()
-    }, vsBrute = false)
-    // flat SQ8 (the training-free 4× code): build + exhaustive codes
-    // scan at N, twin contract riding the scan
-    val sq8 = timed("dd5_sq8_build")(
-      Similarity.buildSq8(corpus, "c_id", "c_vec"))
-    val sq8Codes = sq8.encoded.cache()
-    sq8Codes.count()
-    requireTwins("sq8_scan", timed("dd5_sq8_scan") {
-      Similarity.sq8TopK(sq8.copy(encoded = sq8Codes), queries,
-        "q_id", "q_vec", k = 5).collect()
-    })
-    sq8Codes.unpersist()
     corpus.unpersist()
     queries.unpersist()
   }
@@ -1404,20 +387,9 @@ object ScaleProbe {
     *   sbt "runMain graft.tools.ScaleProbe 800 datadom6"   // 2M vectors
     */
   private def datadom6Probe(spark: SparkSession, factor: Int): Unit = {
-    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
     import graft.operators.{AnnIndexStore, LexIndexStore, Similarity}
-    def timed[T](name: String)(f: => T): T = timedJson(name, factor)(f)
     val par = spark.sparkContext.defaultParallelism
-    def land(df: DataFrame, srcDir: String, name: String): Unit = {
-      val tmp = Files.createTempDirectory("dd6_land").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath, Paths.get(s"$srcDir/$name"))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-    }
     val base = Files.createTempDirectory("dd6").toString
 
     // ---- ANN streaming growth ----
@@ -1432,7 +404,7 @@ object ScaleProbe {
     val annDir = s"$base/annidx"
     val annSrc = s"$base/annsrc"
     new java.io.File(annSrc).mkdirs()
-    timed("dd6_ann_build") {
+    timedJson("dd6_ann_build", factor) {
       AnnIndexStore.save(spark, annDir,
         Similarity.buildIvf(corpus, "c_id", "c_vec", k = 64, iters = 2),
         Similarity.buildPq(corpus, "c_id", "c_vec", m = 16, k = 16, iters = 2))
@@ -1472,18 +444,18 @@ object ScaleProbe {
     try {
       // the high-cadence regime the sidecar exists for: a SMALL trigger
       // whose bucket set is a real fraction of the folded layout
-      timed("dd6_ann_trigger_250") {
+      timedJson("dd6_ann_trigger_250", factor) {
         land(arrival(0L, 250L), annSrc, "a0.parquet")
         annStream.processAllAvailable()
       }
       annInvariant("after_250", nVecs + 250L)
-      timed("dd6_ann_trigger_5k") {
+      timedJson("dd6_ann_trigger_5k", factor) {
         land(arrival(250L, 5250L), annSrc, "a1.parquet")
         annStream.processAllAvailable()
       }
       annInvariant("after_5k", nVecs + 5250L)
       // 20k arrival whose first 2.5k re-ship arrival 2's tail
-      timed("dd6_ann_trigger_20k_overlap") {
+      timedJson("dd6_ann_trigger_20k_overlap", factor) {
         land(arrival(2750L, 22750L), annSrc, "a2.parquet")
         annStream.processAllAvailable()
       }
@@ -1498,7 +470,7 @@ object ScaleProbe {
       // that grows.
       var sLo = 22750L
       (1 to 6).foreach { i =>
-        timed(s"dd6_ann_trigger_5k_s$i") {
+        timedJson(s"dd6_ann_trigger_5k_s$i", factor) {
           land(arrival(sLo, sLo + 5000L), annSrc, s"s$i.parquet")
           annStream.processAllAvailable()
         }
@@ -1521,20 +493,9 @@ object ScaleProbe {
     *   sbt "runMain graft.tools.ScaleProbe 800 datadom6lex"  // 10M docs
     */
   private def datadom6LexProbe(spark: SparkSession, factor: Int): Unit = {
-    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
     import graft.operators.LexIndexStore
-    def timed[T](name: String)(f: => T): T = timedJson(name, factor)(f)
     val par = spark.sparkContext.defaultParallelism
-    def land(df: DataFrame, srcDir: String, name: String): Unit = {
-      val tmp = Files.createTempDirectory("dd6_land").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath, Paths.get(s"$srcDir/$name"))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-    }
     val base = Files.createTempDirectory("dd6lex").toString
     val nDocs = factor * 12500L
     val vocab = (0 until 1024).map(i => f"w$i%04d")
@@ -1547,7 +508,7 @@ object ScaleProbe {
     val lexDir = s"$base/lexidx"
     val lexSrc = s"$base/lexsrc"
     new java.io.File(lexSrc).mkdirs()
-    timed("dd6_lex_build") {
+    timedJson("dd6_lex_build", factor) {
       LexIndexStore.build(spark, lexDir, docs, "doc_id", "text",
         nBuckets = 64)
     }
@@ -1576,18 +537,18 @@ object ScaleProbe {
     }
     try {
       // small-trigger regime first (one planted doc: id 7)
-      timed("dd6_lex_trigger_500") {
+      timedJson("dd6_lex_trigger_500", factor) {
         land(docArrival(0L, 500L), lexSrc, "d0.parquet")
         lexStream.processAllAvailable()
       }
       lexInvariant("after_500", 1L)
-      timed("dd6_lex_trigger_10k") {
+      timedJson("dd6_lex_trigger_10k", factor) {
         land(docArrival(500L, 10500L), lexSrc, "d1.parquet")
         lexStream.processAllAvailable()
       }
       lexInvariant("after_10k", 21L)
       // 40k arrival re-shipping arrival 2's back half (ids 5.5k–10.5k)
-      timed("dd6_lex_trigger_40k_overlap") {
+      timedJson("dd6_lex_trigger_40k_overlap", factor) {
         land(docArrival(5500L, 45500L), lexSrc, "d2.parquet")
         lexStream.processAllAvailable()
       }
@@ -1601,7 +562,7 @@ object ScaleProbe {
       // spread is the evidence.
       var sLo = 45500L
       (1 to 6).foreach { i =>
-        timed(s"dd6_lex_trigger_10k_s$i") {
+        timedJson(s"dd6_lex_trigger_10k_s$i", factor) {
           land(docArrival(sLo, sLo + 10000L), lexSrc, s"s$i.parquet")
           lexStream.processAllAvailable()
         }
@@ -1612,276 +573,34 @@ object ScaleProbe {
     } finally lexStream.stop()
   }
 
-  /** Anomaly isolation for the datadom findings: times classifier
-    * training on the SAME 5000-doc labeled slice materialized two ways —
-    * fresh from parquet vs filtered out of a factor×-cached corpus —
-    * and containment decontamination with the corpus as the only
-    * variable. Separates "operator is corpus-bound" from "operator
-    * inherits the corpus frame's scan/GC weight".
-    *
-    *   sbt "runMain graft.tools.ScaleProbe 200 trainmicro"
-    */
-  private def trainmicroProbe(spark: SparkSession, factor: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.{Classifier, Dedup}
-    def timed[T](name: String)(f: => T): T = timedJson(name, factor)(f)
-    val par = spark.sparkContext.defaultParallelism
-    val docs0 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      .select("doc_id", "text")
-    val spamText = " click here buy now free offer limited prize winner " +
-      "cheap deal subscribe click here buy now free offer"
-    def label(df: org.apache.spark.sql.DataFrame) = df.select(col("doc_id"),
-      when(pmod(col("doc_id"), lit(3)) === 0, concat(col("text"), lit(spamText)))
-        .otherwise(col("text")).as("text"),
-      when(pmod(col("doc_id"), lit(3)) === 0, lit(0.0)).otherwise(lit(1.0))
-        .as("label"))
-    // (a) slice fresh from parquet — no big frame anywhere in the plan
-    val fresh = label(docs0).filter(col("doc_id") < 10000).cache()
-    println(s"""{"probe":"tm_fresh_slice","n":${fresh.count()}}""")
-    timed("tm_train_fresh_slice") {
-      Classifier.trainQualityLr(fresh, "doc_id", "text", "label",
-        dim = 2048, iters = 10, lr = 1600.0)
-    }
-    // (b) identical slice filtered from the factor×-cached corpus (the
-    // datadom shape)
-    val corpus = (0 until factor).map(i => docs0.select(
-      (col("doc_id") + lit(i * 1000000L)).as("doc_id"), col("text")))
-      .reduce(_ unionByName _).repartition(par)
-    val labeled = label(corpus).cache()
-    println(s"""{"probe":"tm_cached_corpus","n":${labeled.count()}}""")
-    timed("tm_train_slice_of_cached_corpus") {
-      Classifier.trainQualityLr(labeled.filter(col("doc_id") < 10000),
-        "doc_id", "text", "label", dim = 2048, iters = 10, lr = 1600.0)
-    }
-    // (c) slice PRE-MATERIALIZED out of the cached corpus (checkpoint
-    // cuts the corpus out of the training plan entirely)
-    val cut = labeled.filter(col("doc_id") < 10000).localCheckpoint(true)
-    timed("tm_train_checkpointed_slice") {
-      Classifier.trainQualityLr(cut, "doc_id", "text", "label",
-        dim = 2048, iters = 10, lr = 1600.0)
-    }
-    Dedup.releaseLocalCheckpoint(cut)
-    // (d) PURE map-only scoring over the corpus — the datadom stage
-    // also paid a corpus×corpus eval join; this is the operator alone
-    val model = Classifier.trainQualityLr(fresh, "doc_id", "text", "label",
-      dim = 2048, iters = 2, lr = 1600.0)
-    timed("tm_score_pure_maponly") {
-      Classifier.score(labeled, "doc_id", "text", model)
-        .agg(sum(col("quality_score"))).collect()
-    }
-    // (e) containment with the big corpus, fresh JVM state (no other
-    // caches resident): does the factor-200 bend reproduce?
-    timed("tm_containment_13gram") {
-      val bench = docs0.filter(col("doc_id") < 100).select(
-        (col("doc_id") + 5000000L).as("bench_id"),
-        expr("substring(text, greatest(length(text) - 399, 1), 400)").as("prompt"))
-      val hits = Dedup.containmentDecontaminate(labeled.select("doc_id", "text"),
-        "doc_id", "text", bench, "bench_id", "prompt", n = 13, minRatio = 0.9)
-      println(s"""{"probe":"tm_containment_pairs","n":${hits.count()}}""")
-    }
-  }
+  /** The probe modes, by the name `main` takes. */
+  private val probes: Map[String, (SparkSession, Int) => Unit] = Map(
+    "datadom2" -> datadom2Probe,
+    "datadom3" -> datadom3Probe,
+    "datadom4" -> datadom4Probe,
+    "datadom6" -> datadom6Probe,
+    "datadom6lex" -> datadom6LexProbe)
 
-  /** Containment-decontamination isolation: the operator alone against
-    * a factor× corpus, timed COLD then WARM (×2) in a fresh JVM, with
-    * the join strategies of the executed plan printed — separates
-    * algorithmic growth from JVM warmup and broadcast-vs-merge drift.
-    *
-    *   sbt "runMain graft.tools.ScaleProbe 200 contmicro"
+  /** `<factor> <mode>` → (factor, mode). Throws IllegalArgumentException,
+    * naming the modes, on anything else — before any session is built.
     */
-  private def contmicroProbe(spark: SparkSession, factor: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.Dedup
-    def timed[T](name: String)(f: => T): T = timedJson(name, factor)(f)
-    val par = spark.sparkContext.defaultParallelism
-    val docs0 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      .select("doc_id", "text")
-    val corpus = (0 until factor).map(i => docs0.select(
-      (col("doc_id") + lit(i * 1000000L)).as("doc_id"), col("text")))
-      .reduce(_ unionByName _).repartition(par).cache()
-    println(s"""{"probe":"cm_corpus","factor":$factor,"n":${corpus.count()}}""")
-    val bench = docs0.filter(col("doc_id") < 100).select(
-      (col("doc_id") + 5000000L).as("bench_id"),
-      expr("substring(text, greatest(length(text) - 399, 1), 400)").as("prompt"))
-    // construct INSIDE the timer: the operator pins its matched-windows
-    // frame eagerly, and that corpus pass must be part of the wall
-    def build() = Dedup.containmentDecontaminate(corpus, "doc_id", "text",
-      bench, "bench_id", "prompt", n = 13, minRatio = 0.9)
-    (1 to 2).foreach { i =>
-      timed(s"cm_containment_run$i") {
-        println(s"""{"probe":"cm_pairs","n":${build().count()}}""")
-      }
+  private[tools] def parseArgs(args: Array[String]): (Int, String) = {
+    def usage(why: String) = new IllegalArgumentException(
+      s"$why; usage: ScaleProbe <factor> <mode>, " +
+        s"mode one of ${probes.keys.toSeq.sorted.mkString(", ")}")
+    args match {
+      case Array(f, mode) =>
+        val factor = f.toIntOption.filter(_ > 0)
+          .getOrElse(throw usage(s"factor '$f' is not a positive integer"))
+        if (!probes.contains(mode)) throw usage(s"unknown mode '$mode'")
+        (factor, mode)
+      case _ => throw usage(s"expected 2 arguments, got ${args.length}")
     }
-    val plan = build().queryExecution.executedPlan.toString
-    val bhj = plan.linesIterator.count(_.contains("BroadcastHashJoin"))
-    val smj = plan.linesIterator.count(_.contains("SortMergeJoin"))
-    println(s"""{"probe":"cm_plan","broadcast_joins":$bhj,"merge_joins":$smj}""")
-    corpus.unpersist()
-  }
-
-  /** Pure map-only classifier scoring at factor× corpus — codegen
-    * warmed by a 2-iter throwaway train first, then ×2 timed passes.
-    *
-    *   sbt "runMain graft.tools.ScaleProbe 200 scoremicro"
-    */
-  private def scoremicroProbe(spark: SparkSession, factor: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.Classifier
-    def timed[T](name: String)(f: => T): T = timedJson(name, factor)(f)
-    val par = spark.sparkContext.defaultParallelism
-    val docs0 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      .select("doc_id", "text")
-    val corpus = (0 until factor).map(i => docs0.select(
-      (col("doc_id") + lit(i * 1000000L)).as("doc_id"), col("text")))
-      .reduce(_ unionByName _).repartition(par).cache()
-    println(s"""{"probe":"sm_corpus","factor":$factor,"n":${corpus.count()}}""")
-    val labeled = docs0.select(col("doc_id"), col("text"),
-      when(pmod(col("doc_id"), lit(3)) === 0, lit(0.0)).otherwise(lit(1.0)).as("label"))
-    val model = Classifier.trainQualityLr(labeled, "doc_id", "text", "label",
-      dim = 2048, iters = 2, lr = 1600.0) // warms the kernel codegen
-    (1 to 2).foreach { i =>
-      timed(s"sm_score_run$i") {
-        Classifier.score(corpus, "doc_id", "text", model)
-          .agg(sum(col("quality_score"))).collect()
-      }
-    }
-    corpus.unpersist()
   }
 
   def main(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toInt).getOrElse(240000)
-    val mode = args.lift(1).getOrElse("unified")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (mode == "dedup") {
-      try dedupProbe(spark, n) finally spark.stop()
-      return
-    }
-    if (mode == "curation") {
-      try curationProbe(spark, n) finally spark.stop()
-      return
-    }
-    if (mode == "datadom") {
-      try datadomProbe(spark, n) finally spark.stop()
-      return
-    }
-    if (mode == "datadom2") {
-      try datadom2Probe(spark, n) finally spark.stop()
-      return
-    }
-    if (mode == "churn") {
-      try churnProbe(spark, n) finally spark.stop()
-      return
-    }
-    if (mode == "datadom3") {
-      try datadom3Probe(spark, n) finally spark.stop()
-      return
-    }
-    if (mode == "datadom4") {
-      try datadom4Probe(spark, n) finally spark.stop()
-      return
-    }
-    if (mode == "datadom5") {
-      try datadom5Probe(spark, n) finally spark.stop()
-      return
-    }
-    if (mode == "datadom6") {
-      try datadom6Probe(spark, n) finally spark.stop()
-      return
-    }
-    if (mode == "datadom6lex") {
-      try datadom6LexProbe(spark, n) finally spark.stop()
-      return
-    }
-    if (mode == "trainmicro") {
-      try trainmicroProbe(spark, n) finally spark.stop()
-      return
-    }
-    if (mode == "contmicro") {
-      try contmicroProbe(spark, n) finally spark.stop()
-      return
-    }
-    if (mode == "scoremicro") {
-      try scoremicroProbe(spark, n) finally spark.stop()
-      return
-    }
-    if (mode == "annindex") {
-      try annIndexProbe(spark, n) finally spark.stop()
-      return
-    }
-    if (mode == "manifestlog") {
-      try manifestLogProbe(spark, n) finally spark.stop()
-      return
-    }
-    if (mode == "pack") {
-      try packProbe(spark, n) finally spark.stop()
-      return
-    }
-    if (mode == "bpe") {
-      try bpeProbe(spark, n) finally spark.stop()
-      return
-    }
-    if (mode == "lexindex") {
-      try lexIndexProbe(spark, n) finally spark.stop()
-      return
-    }
-    if (mode == "cumsumkey") {
-      try cumsumKeyProbe(spark, n) finally spark.stop()
-      return
-    }
-    if (mode == "timeseries") {
-      // events.parquet carries TIMESTAMP(NANOS)
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      try timeseriesProbe(spark, n) finally spark.stop()
-      return
-    }
-
-    val base = Files.createTempDirectory("scaleprobe").toString
-    val src = s"$base/src"; Files.createDirectories(Paths.get(src))
-    val lines = Fixtures.syntheticCapture(n)
-    val files = 16
-    lines.grouped((lines.length + files - 1) / files).zipWithIndex.foreach {
-      case (chunk, i) =>
-        Files.write(Paths.get(f"$src/c$i%02d.txt"), chunk.mkString("\n").getBytes)
-    }
-
-    val metrics = new Metrics(batchIntervalMs = 100)
-    spark.streams.addListener(metrics)
-    val t0 = System.nanoTime()
-    mode match {
-      case "unified" =>
-        val q = F1Pipeline.startUnified(spark, src, s"$base/tables", s"$base/ckpt",
-          trigger = Trigger.ProcessingTime("100 milliseconds"),
-          maxFilesPerTrigger = Some(2))
-        try q.processAllAvailable() finally q.stop()
-      case "pertopic" =>
-        val qs = F1Pipeline.startPerTopic(spark, src, s"$base/tables", s"$base/ckpt",
-          trigger = Trigger.ProcessingTime("100 milliseconds"),
-          maxFilesPerTrigger = Some(2))
-        try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
-    }
-    val wallSec = (System.nanoTime() - t0) / 1e9
-    spark.streams.removeListener(metrics)
-
-    val batches = metrics.batchReports.filter(_.numInputRows > 0)
-    val times = batches.map(_.processMs).sorted
-    def pct(p: Double): Long =
-      if (times.isEmpty) 0L else times(math.min(times.size - 1, (p * times.size).toInt))
-    val derived = Seq("lap_data", "weather", "telemetry", "positions",
-      "car_positions", "race_control").map { t =>
-      val p = s"$base/tables/$t"
-      t -> (if (Files.exists(Paths.get(p))) spark.read.parquet(p).count() else 0L)
-    }
-    println(s"""{"probe":"$mode","lines":${lines.length},"wall_sec":$wallSec,""" +
-      s""""lines_per_sec":${(lines.length / wallSec).toInt},""" +
-      s""""batches":${batches.size},"batch_ms_p50":${pct(0.5)},"batch_ms_p95":${pct(0.95)},""" +
-      s""""batch_ms_max":${times.lastOption.getOrElse(0L)},""" +
-      derived.map { case (t, c) => s""""rows_$t":$c""" }.mkString(",") + "}")
-    spark.stop()
+    val (factor, mode) = parseArgs(args)
+    val spark = Harness.buildSession()
+    try probes(mode)(spark, factor) finally spark.stop()
   }
 }

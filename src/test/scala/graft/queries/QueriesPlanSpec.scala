@@ -361,4 +361,20 @@ class QueriesPlanSpec extends SparkSpec {
     // the stored scans keep their pruning under the TVF
     assert(p.contains("PartitionFilters: ["), p)
   }
+
+  test("x97 / x21b: within-run pins keep the returned plans off parquet, Exchanges bounded") {
+    // the round-17 pins (plans/r17/*_after.txt: 14 and 10, down from 56
+    // and 66). Counted as those files were: lines of the formatted
+    // explain that contain "Exchange" (node line + detail line, broadcast
+    // included). The bounds are the counts on this fixture, not looser.
+    Seq("x97_perplexity_gate" -> 14, "x21b_dedup_spans_verified" -> 10).foreach {
+      case (name, bound) =>
+        val p = try SparkEntry.queries(name)(spark, dir).queryExecution
+          .explainString(org.apache.spark.sql.execution.FormattedMode)
+        finally graft.tools.Harness.releaseAllPinned(spark)
+        assert(!p.contains("Scan parquet"), s"$name scans parquet:\n$p")
+        val exchanges = p.linesIterator.count(_.contains("Exchange"))
+        assert(exchanges <= bound, s"$name: $exchanges Exchange lines > $bound:\n$p")
+    }
+  }
 }
