@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** The reference's analytics read path (/root/reference/dashboard.py:29-211)
   * as plain DataFrame functions: per-table COUNT(*) (A5), last-5-minute
-  * windowed count (A6), MAX(created_at) latest-record probe (A7), and the
-  * session-header LEFT JOIN (J1).
+  * windowed count (A6) and MAX(created_at) latest-record probe (A7), all
+  * tables in one pass. The session-header LEFT JOIN (J1) is registry
+  * query q05.
   *
   * The reference polls these as SQL against Postgres every 5 s; here each is
   * a one-pass aggregate over the derived tables, so the TUI-equivalent can
@@ -15,13 +16,6 @@ import org.apache.spark.sql.functions._
   * dependence is nondeterministic and untestable.
   */
 object Dashboard {
-
-  /** A5+A6+A7 in a single pass over one table. */
-  def tableStats(df: DataFrame, tsCol: String, now: Column): DataFrame =
-    df.agg(
-      count(lit(1)).as("n_rows"),
-      count(when(col(tsCol) > now - expr("INTERVAL 5 MINUTES"), 1)).as("n_last_5min"),
-      max(col(tsCol)).as("latest_ts"))
 
   /** All-tables stats frame: one row per table name, like the dashboard's
     * per-table panel. Each input is (name, df, timestamp column) — the
@@ -71,14 +65,4 @@ object Dashboard {
       out(panel)
       if (i < rounds && intervalMs > 0) Thread.sleep(intervalMs)
     }
-
-  /** J1 — session header: sessions LEFT JOIN a (small) meetings/races dim,
-    * broadcast (/root/reference/dashboard.py:103-108).
-    */
-  def sessionHeader(sessions: DataFrame, meetings: DataFrame): DataFrame =
-    sessions.join(broadcast(meetings),
-      sessions("meeting_key") === meetings("meeting_key"), "left")
-      .select(sessions("session_key"), sessions("name"), sessions("type"),
-        sessions("date"), sessions("circuit"),
-        meetings("meeting_name"), meetings("location"))
 }

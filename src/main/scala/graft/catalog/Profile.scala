@@ -70,13 +70,13 @@ object Profile {
     * and for `freqCols` the TOP KEY FREQUENCY (max per-value group count
     * — the number skew mitigation actually keys off; one extra
     * aggregation per requested column, so callers name only join keys).
-    * Upserted by column name through the [[graft.sinks.MergeEngine]]
-    * seam: re-profiling after a load updates in place, and readers get
+    * Upserted by column name through a [[graft.sinks.ManifestMergeEngine]]:
+    * re-profiling after a load updates in place, and readers get
     * snapshot isolation from the manifest backend.
     */
   def saveStats(df: DataFrame, cols: Seq[String], statsPath: String,
       freqCols: Seq[String] = Seq.empty,
-      engine: graft.sinks.MergeEngine = new graft.sinks.ManifestMergeEngine())
+      engine: graft.sinks.ManifestMergeEngine = new graft.sinks.ManifestMergeEngine())
       : Unit = {
     require(freqCols.forall(cols.contains),
       s"freqCols $freqCols must be a subset of the profiled cols $cols")
@@ -106,7 +106,7 @@ object Profile {
     * `top_freq`), broadcast-or-shuffle decisions (`n_rows`).
     */
   def loadStats(spark: org.apache.spark.sql.SparkSession, statsPath: String,
-      engine: graft.sinks.MergeEngine = new graft.sinks.ManifestMergeEngine())
+      engine: graft.sinks.ManifestMergeEngine = new graft.sinks.ManifestMergeEngine())
       : Option[DataFrame] =
     engine.read(spark, statsPath)
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.Similarity.{IvfIndex, PqModel}
-import graft.sinks.{ManifestMergeEngine, MergeEngine}
+import graft.sinks.ManifestMergeEngine
 
 /** Persisted, reusable ANN index artifacts — the build-once/search-many
   * lifecycle a 100 TB embedding corpus forces. [[Similarity.buildIvf]] /
@@ -14,9 +14,9 @@ import graft.sinks.{ManifestMergeEngine, MergeEngine}
   * STORED artifact instead of re-touching the corpus (the per-query
   * rebuild was ~80% of x24's wall).
   *
-  * Layout under `indexPath` — four tables, all managed through the
-  * [[MergeEngine]] seam (ACID manifest backend by default, so index
-  * growth is snapshot-isolated from concurrent searches):
+  * Layout under `indexPath` — four tables, all managed through a
+  * [[ManifestMergeEngine]] (the ACID manifest backend, so index growth
+  * is snapshot-isolated from concurrent searches):
   * {{{
   *   centroids/  (cid INT 1-based, vec ARRAY<DOUBLE>)        IVF quantizer
   *   codebooks/  (idx INT, vec ARRAY<DOUBLE>, m INT, k INT)  PQ model
@@ -56,7 +56,7 @@ object AnnIndexStore {
     * [[compact]]'s engine.compact still forces a sweep, so a maintained
     * store reclaims promptly.
     */
-  private[operators] def defaultEngine: MergeEngine =
+  private[operators] def defaultEngine: ManifestMergeEngine =
     new ManifestMergeEngine(gcEvery = 16)
 
   private def centroidsPath(p: String) = s"$p/centroids"
@@ -127,7 +127,7 @@ object AnnIndexStore {
     * filtered search).
     */
   def save(spark: SparkSession, indexPath: String, ivf: IvfIndex, pq: PqModel,
-      engine: MergeEngine = AnnIndexStore.defaultEngine,
+      engine: ManifestMergeEngine = AnnIndexStore.defaultEngine,
       metadata: Option[DataFrame] = None): Unit = {
     require(engine.read(spark, centroidsPath(indexPath)).isEmpty,
       s"index already exists at $indexPath — rebuilds go to a new path")
@@ -152,41 +152,18 @@ object AnnIndexStore {
         pq.encoded.join(ivf.assigned.select(col(idCol), col("cid")), idCol))
       .repartition(col("cid"))
     // stored-id sidecar FIRST (probe authority — the IdSidecar
-    // commit-order contract), then the data tables. Round-16: the two
-    // data tables' files stage concurrently while the sidecar seeds —
-    // the contract orders the COMMITS, which stay sidecar → assigned →
-    // encoded (the appendEncoded rationale).
-    engine match {
-      case me: graft.sinks.ManifestMergeEngine =>
-        val sidecarStaged = StagePool.submit(spark)(
-          IdSidecar.stageAppend(indexPath, ivf.assigned.select(col(idCol)),
-            idCol, me))
-        val aStaged = StagePool.submit(spark)(
-          me.stageAppend(spark, assignedPath(indexPath), assignedFrame,
-            Some("cid")))
-        val eStaged = StagePool.submit(spark)(
-          me.stageAppend(spark, encodedPath(indexPath), encodedFrame,
-            Some("cid")))
-        try {
-          IdSidecar.commitStaged(spark, indexPath, me,
-            StagePool.get(sidecarStaged))
-          me.commitStaged(spark, StagePool.get(aStaged))
-          me.commitStaged(spark, StagePool.get(eStaged))
-        } finally {
-          StagePool.awaitQuietly(sidecarStaged)
-          StagePool.awaitQuietly(aStaged)
-          StagePool.awaitQuietly(eStaged)
-        }
-      case _ =>
-        IdSidecar.append(indexPath, ivf.assigned.select(col(idCol)), idCol,
-          engine)
-        engine.appendPartitioned(assignedPath(indexPath), assignedFrame, "cid")
-        engine.appendPartitioned(encodedPath(indexPath), encodedFrame, "cid")
-    }
+    // commit-order contract), then assigned, then encoded; all three
+    // stage concurrently and none commits until all have staged
+    IdSidecar.growStaged(indexPath, ivf.assigned.select(col(idCol)), idCol,
+      engine, "ann_sidecar_append", Seq(
+        IdSidecar.TableAppend(assignedPath(indexPath), assignedFrame,
+          Some("cid"), "ann_assigned_append"),
+        IdSidecar.TableAppend(encodedPath(indexPath), encodedFrame,
+          Some("cid"), "ann_encoded_append")))
   }
 
   private def loadMatrix(spark: SparkSession, path: String,
-      engine: MergeEngine): Array[Array[Double]] =
+      engine: ManifestMergeEngine): Array[Array[Double]] =
     // model matrices are FROZEN per store (retraining = new path); cache
     // the driver collect per committed snapshot (round-16) — searches and
     // stream-start loads stop re-paying a Spark job for immutable state
@@ -204,7 +181,7 @@ object AnnIndexStore {
     * the (m, k) head were separate jobs at every load/grow/stream-start).
     */
   private def loadCodebookModel(spark: SparkSession, indexPath: String,
-      engine: MergeEngine, missing: => String): (Array[Array[Double]], Int, Int) =
+      engine: ManifestMergeEngine, missing: => String): (Array[Array[Double]], Int, Int) =
     graft.sinks.MetaCache.cached(spark, codebooksPath(indexPath),
       "ann_codebooks", engine) {
       val cb = engine.read(spark, codebooksPath(indexPath))
@@ -219,7 +196,7 @@ object AnnIndexStore {
     * probed lists' rows (list-id filter → pushed to the scan).
     */
   def load(spark: SparkSession, indexPath: String,
-      engine: MergeEngine = AnnIndexStore.defaultEngine): PersistedAnnIndex = {
+      engine: ManifestMergeEngine = AnnIndexStore.defaultEngine): PersistedAnnIndex = {
     val centroids = loadMatrix(spark, centroidsPath(indexPath), engine)
     val (codebooks, pqM, pqK) = loadCodebookModel(spark, indexPath, engine,
       s"no codebooks at $indexPath")
@@ -255,7 +232,7 @@ object AnnIndexStore {
     */
   def addVectors(spark: SparkSession, indexPath: String, vectors: DataFrame,
       corpusId: String, corpusVec: String,
-      engine: MergeEngine = AnnIndexStore.defaultEngine,
+      engine: ManifestMergeEngine = AnnIndexStore.defaultEngine,
       metadata: Option[DataFrame] = None): Unit = {
     val centroids = loadMatrix(spark, centroidsPath(indexPath), engine)
     val (codebooks, pqM, pqK) = loadCodebookModel(spark, indexPath, engine,
@@ -274,7 +251,7 @@ object AnnIndexStore {
   private def appendEncoded(indexPath: String, vectors: DataFrame,
       corpusId: String, corpusVec: String, centroids: Array[Array[Double]],
       codebooks: Array[Array[Double]], m: Int, k: Int,
-      engine: MergeEngine, metadata: Option[DataFrame] = None): Unit = {
+      engine: ManifestMergeEngine, metadata: Option[DataFrame] = None): Unit = {
     val proj = vectors.select(col(corpusId), col(corpusVec))
     metadata.foreach(m0 => requireMetadataCoversIds(
       proj.select(col(corpusId)), corpusId, m0,
@@ -296,67 +273,23 @@ object AnnIndexStore {
     val assignedFrame = newAssigned.repartition(col("cid"))
     val encodedFrame = metadata.fold(enc0)(m0 => enc0.join(m0, Seq(corpusId)))
       .repartition(col("cid"))
-    val spark = vectors.sparkSession
     // sidecar first — see the IdSidecar commit-order contract. This is a
     // GROW path, so a pre-sidecar store's first grow BACKFILLS the fold
     // from the complete stored-id set (one full id-column scan, once) —
     // seeding from the increment alone would make every LATER grow
     // re-admit replayed original ids as new (double-indexed rows).
-    //
-    // Round-16: on the manifest engine the assigned and encoded files
-    // STAGE concurrently while the sidecar append runs — the contract
-    // orders the COMMITS (sidecar → assigned → encoded), which the
-    // manifest publishes below preserve exactly (the LexIndexStore
-    // appendCorpus rationale; a staging failure aborts with zero data
-    // commits, strictly tighter than the sequential partial window).
-    engine match {
-      case me: graft.sinks.ManifestMergeEngine =>
-        val sidecarStaged = StagePool.submit(spark)(
-          IdSidecar.stageAppend(indexPath, newAssigned0.select(col(corpusId)),
-            corpusId, me,
-            backfillFrom = stored.map(_.select(col(corpusId)))))
-        val aStaged = StagePool.submit(spark)(
-          me.stageAppend(spark, assignedPath(indexPath), assignedFrame,
-            Some("cid")))
-        val eStaged = StagePool.submit(spark)(
-          me.stageAppend(spark, encodedPath(indexPath), encodedFrame,
-            Some("cid")))
-        try {
-          graft.tools.PhaseTimer("ann_sidecar_append") {
-            IdSidecar.commitStaged(spark, indexPath, me,
-              StagePool.get(sidecarStaged))
-          }
-          graft.tools.PhaseTimer("ann_assigned_append") {
-            me.commitStaged(spark, StagePool.get(aStaged))
-          }
-          graft.tools.PhaseTimer("ann_encoded_append") {
-            me.commitStaged(spark, StagePool.get(eStaged))
-          }
-        } finally {
-          StagePool.awaitQuietly(sidecarStaged)
-          StagePool.awaitQuietly(aStaged)
-          StagePool.awaitQuietly(eStaged)
-        }
-      case _ =>
-        graft.tools.PhaseTimer("ann_sidecar_append") {
-          IdSidecar.append(indexPath, newAssigned0.select(col(corpusId)),
-            corpusId, engine,
-            backfillFrom = stored.map(_.select(col(corpusId))))
-        }
-        graft.tools.PhaseTimer("ann_assigned_append") {
-          engine.appendPartitioned(assignedPath(indexPath), assignedFrame,
-            "cid")
-        }
-        graft.tools.PhaseTimer("ann_encoded_append") {
-          engine.appendPartitioned(encodedPath(indexPath), encodedFrame,
-            "cid")
-        }
-    }
+    IdSidecar.growStaged(indexPath, newAssigned0.select(col(corpusId)),
+      corpusId, engine, "ann_sidecar_append", Seq(
+        IdSidecar.TableAppend(assignedPath(indexPath), assignedFrame,
+          Some("cid"), "ann_assigned_append"),
+        IdSidecar.TableAppend(encodedPath(indexPath), encodedFrame,
+          Some("cid"), "ann_encoded_append")),
+      backfillFrom = stored.map(_.select(col(corpusId))))
   }
 
   /** Delete vectors from a stored index: TOMBSTONES, not rewrites — the
     * ids land in a `deleted/` side table (replay-idempotent dedupAppend
-    * through the engine seam, each id carrying its inverted-list id so
+    * through the engine, each id carrying its inverted-list id so
     * the purge pass knows which partitions to touch) and [[load]]
     * anti-joins them out of both data frames, so a deleted id can never
     * surface from any search path over a loaded index. O(deletes) work:
@@ -371,7 +304,7 @@ object AnnIndexStore {
     */
   def deleteVectors(spark: SparkSession, indexPath: String, ids: DataFrame,
       corpusId: String,
-      engine: MergeEngine = AnnIndexStore.defaultEngine): Unit = {
+      engine: ManifestMergeEngine = AnnIndexStore.defaultEngine): Unit = {
     // the tombstone table is (corpusId, cid) by construction and load/
     // purge recover the id column as "the non-cid one" — an id column
     // literally named "cid" would silently mis-key every later
@@ -388,14 +321,14 @@ object AnnIndexStore {
   /** Physically drop tombstoned rows and reclaim their inverted lists:
     * for each TOUCHED list (the tombstones carry their cid — O(touched)
     * partitions, never the whole index), rewrite the partition minus the
-    * deleted ids through the engine's [[MergeEngine.replacePartitions]],
+    * deleted ids through the engine's [[ManifestMergeEngine.replacePartitions]],
     * then clear the tombstone table. A fully-deleted list's partition
     * disappears entirely. Maintenance pass, single-maintainer contract
     * (same as [[compact]]); searches against an already-LOADED index are
     * snapshot-isolated by the manifest backend.
     */
   def purgeDeleted(spark: SparkSession, indexPath: String,
-      engine: MergeEngine = AnnIndexStore.defaultEngine): Unit = {
+      engine: ManifestMergeEngine = AnnIndexStore.defaultEngine): Unit = {
     engine.read(spark, deletedPath(indexPath)).foreach { del =>
       val idc = del.columns.filterNot(_ == "cid").head
       val touched = del.select("cid").distinct().collect().map(_.get(0)).toSeq
@@ -427,7 +360,7 @@ object AnnIndexStore {
     * pruned search keeps its partition filters after compaction.
     */
   def compact(spark: SparkSession, indexPath: String,
-      engine: MergeEngine = AnnIndexStore.defaultEngine,
+      engine: ManifestMergeEngine = AnnIndexStore.defaultEngine,
       targetBytes: Long = 128L << 20): Unit = {
     engine.compact(spark, assignedPath(indexPath), targetBytes)
     engine.compact(spark, encodedPath(indexPath), targetBytes)
@@ -446,7 +379,7 @@ object AnnIndexStore {
   def streamingAddVectors(spark: SparkSession, sourceDir: String,
       schema: org.apache.spark.sql.types.StructType, indexPath: String,
       checkpointDir: String, corpusId: String, corpusVec: String,
-      engine: MergeEngine = AnnIndexStore.defaultEngine,
+      engine: ManifestMergeEngine = AnnIndexStore.defaultEngine,
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"),
       foldEvery: Int = 8)

@@ -105,7 +105,7 @@ object Classifier {
   }
 
   /** Persist a trained model: weights as an (idx, w) table plus a 1-row
-    * (bias, dim) meta table through the [[graft.sinks.MergeEngine]] seam
+    * (bias, dim) meta table through a [[graft.sinks.ManifestMergeEngine]]
     * — train-once/score-many, the [[AnnIndexStore]] lifecycle for the
     * scorer (a production gate retrains occasionally but scores every
     * ingest batch; the model must outlive the training session). Both
@@ -113,7 +113,7 @@ object Classifier {
     */
   def saveModel(spark: org.apache.spark.sql.SparkSession, path: String,
       model: BowLrModel,
-      engine: graft.sinks.MergeEngine = new graft.sinks.ManifestMergeEngine())
+      engine: graft.sinks.ManifestMergeEngine = new graft.sinks.ManifestMergeEngine())
       : Unit = {
     require(engine.read(spark, s"$path/meta").isEmpty,
       s"model already exists at $path — retrains go to a new path")
@@ -136,7 +136,7 @@ object Classifier {
     * the training session's.
     */
   def loadModel(spark: org.apache.spark.sql.SparkSession, path: String,
-      engine: graft.sinks.MergeEngine = new graft.sinks.ManifestMergeEngine())
+      engine: graft.sinks.ManifestMergeEngine = new graft.sinks.ManifestMergeEngine())
       : BowLrModel = {
     val m = engine.read(spark, s"$path/meta")
       .getOrElse(throw new IllegalStateException(s"no model at $path"))
@@ -271,14 +271,14 @@ object Classifier {
     } finally Dedup.releaseLocalCheckpoint(base)
   }
 
-  /** Persist a trained softmax model through the engine seam — the
+  /** Persist a trained softmax model through the manifest engine — the
     * [[saveModel]] lifecycle for the domain labeler: `classes` (cid,
     * label, bias — one row per class, class order frozen) + `weights`
     * (cid, idx, w). Both tables are model-sized (nClasses × dim rows).
     */
   def saveSoftmaxModel(spark: org.apache.spark.sql.SparkSession, path: String,
       model: BowSoftmaxModel,
-      engine: graft.sinks.MergeEngine = new graft.sinks.ManifestMergeEngine())
+      engine: graft.sinks.ManifestMergeEngine = new graft.sinks.ManifestMergeEngine())
       : Unit = {
     require(engine.read(spark, s"$path/classes").isEmpty,
       s"model already exists at $path — retrains go to a new path")
@@ -308,7 +308,7 @@ object Classifier {
     * [[saveSoftmaxModel]] stored, class order included.
     */
   def loadSoftmaxModel(spark: org.apache.spark.sql.SparkSession, path: String,
-      engine: graft.sinks.MergeEngine = new graft.sinks.ManifestMergeEngine())
+      engine: graft.sinks.ManifestMergeEngine = new graft.sinks.ManifestMergeEngine())
       : BowSoftmaxModel = {
     val classes = engine.read(spark, s"$path/classes")
       .getOrElse(throw new IllegalStateException(s"no model at $path"))

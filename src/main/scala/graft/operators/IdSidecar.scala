@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
-import graft.sinks.MergeEngine
+import graft.sinks.ManifestMergeEngine
 
 /** Id-hash-bucketed stored-id sidecar — the structure that makes a
   * store's REPLAY PROBE cost per trigger O(increment + touched buckets
@@ -66,6 +66,9 @@ import graft.sinks.MergeEngine
   * batch degrades to absent-from-search (clean loss: no table ever
   * counts it), instead of the reverse order's re-appended DUPLICATE
   * data rows, which would corrupt every future search and aggregate.
+  * [[growStaged]] is the one implementation of that order: it stages
+  * every table of the grow first and commits only once all staging has
+  * succeeded, so a failed staging write commits nothing.
   * Tombstoned ids stay in the sidecar until purge — a deleted id's
   * re-arrival is filtered while its rows are still stored, and
   * re-enters only after [[purge]] physically drops it (the existing
@@ -97,7 +100,7 @@ private[graft] object IdSidecar {
     math.min(4096L, math.max(16L, nIds / 65536L)).toInt
 
   private def readBuckets(spark: SparkSession, indexPath: String,
-      engine: MergeEngine): Option[Int] =
+      engine: ManifestMergeEngine): Option[Int] =
     // the bucket modulus is FROZEN at first append, but this head() was a
     // Spark job paid 2-3× per streaming trigger — cache it per committed
     // snapshot (round-16; an absent ids_meta has no snapshot token and
@@ -136,36 +139,13 @@ private[graft] object IdSidecar {
     * [[fold]] would materialize a layout missing the whole seed corpus.
     */
   def append(indexPath: String, ids: DataFrame, idCol: String,
-      engine: MergeEngine, backfillFrom: Option[DataFrame] = None,
-      knownIdCount: Option[Long] = None): Unit = {
-    require(idCol != "ib",
-      "id column may not be named 'ib' (reserved for the sidecar bucket)")
-    val spark = ids.sparkSession
-    readBuckets(spark, indexPath, engine) match {
-      case Some(_) =>
-        // steady-state grow: one log file, O(1) write fanout
-        engine.append(pendingPath(indexPath),
-          ids.select(col(idCol)).coalesce(1))
-      case None =>
-        val seed = backfillFrom.fold(ids.select(col(idCol)))(stored =>
-          stored.select(col(idCol)).unionByName(ids.select(col(idCol))))
-        // sizing only (clamped [16, 4096], ~64k ids/bucket): a caller-
-        // supplied count skips the extra pass; with a backfill the union's
-        // count is unknown and is paid as before (pre-sidecar grow — rare)
-        val b = sizeBuckets(
-          if (backfillFrom.isEmpty && knownIdCount.isDefined) knownIdCount.get
-          else seed.count())
-        // id-sorted within each bucket — see the fold in [[compact]]
-        engine.appendPartitioned(path(indexPath),
-          seed.withColumn("ib", ib(idCol, b))
-            .repartition(col("ib"))
-            .sortWithinPartitions(col("ib"), col(idCol)), "ib")
-        writeBucketsMeta(spark, indexPath, b, engine)
-    }
-  }
+      engine: ManifestMergeEngine, backfillFrom: Option[DataFrame] = None,
+      knownIdCount: Option[Long] = None): Unit =
+    commitStaged(ids.sparkSession, indexPath, engine,
+      stageAppend(indexPath, ids, idCol, engine, backfillFrom, knownIdCount))
 
   private def writeBucketsMeta(spark: SparkSession, indexPath: String,
-      b: Int, engine: MergeEngine): Unit = {
+      b: Int, engine: ManifestMergeEngine): Unit = {
     val schema = StructType(Seq(StructField("buckets", IntegerType,
       nullable = false)))
     engine.overwrite(spark, metaPath(indexPath), spark.createDataFrame(
@@ -176,25 +156,21 @@ private[graft] object IdSidecar {
       engine, Some(b): Option[Int])
   }
 
-  /** Staged form of [[append]]'s WRITE work, for grow paths that overlap
-    * their independent staging jobs and keep only the manifest COMMITS in
-    * contract order (the [[LexIndexStore.appendCorpus]] round-16
-    * rationale). [[stageAppend]] runs the Spark write (pending-log file
-    * in steady state; the folded seed layout on first contact) with
-    * nothing published; [[commitStaged]] publishes — sidecar-first
-    * ordering is then the caller's commit ordering, and the seed's
-    * folded-before-meta ordering is preserved inside commitStaged (meta
-    * is a driver-local write, published last exactly as [[append]] does).
+  /** [[append]] split in two, for [[growStaged]]: [[stageAppend]] runs
+    * the Spark write (pending-log file in steady state; the folded seed
+    * layout on first contact) with nothing published; [[commitStaged]]
+    * publishes, keeping the seed's folded-before-meta order (meta is a
+    * driver-local write, published last).
     */
-  private[graft] sealed trait Staged
-  private[graft] final case class PendingStaged(
-      staged: graft.sinks.ManifestMergeEngine.StagedAppend) extends Staged
-  private[graft] final case class SeedStaged(
-      staged: graft.sinks.ManifestMergeEngine.StagedAppend,
+  private sealed trait Staged
+  private final case class PendingStaged(
+      staged: ManifestMergeEngine.StagedAppend) extends Staged
+  private final case class SeedStaged(
+      staged: ManifestMergeEngine.StagedAppend,
       buckets: Int) extends Staged
 
-  private[graft] def stageAppend(indexPath: String, ids: DataFrame,
-      idCol: String, engine: graft.sinks.ManifestMergeEngine,
+  private def stageAppend(indexPath: String, ids: DataFrame,
+      idCol: String, engine: ManifestMergeEngine,
       backfillFrom: Option[DataFrame] = None,
       knownIdCount: Option[Long] = None): Staged = {
     require(idCol != "ib",
@@ -202,14 +178,19 @@ private[graft] object IdSidecar {
     val spark = ids.sparkSession
     readBuckets(spark, indexPath, engine) match {
       case Some(_) =>
+        // steady-state grow: one log file, O(1) write fanout
         PendingStaged(engine.stageAppend(spark, pendingPath(indexPath),
           ids.select(col(idCol)).coalesce(1), None))
       case None =>
         val seed = backfillFrom.fold(ids.select(col(idCol)))(stored =>
           stored.select(col(idCol)).unionByName(ids.select(col(idCol))))
+        // sizing only: a caller-supplied count skips the extra pass; with
+        // a backfill the union's count is unknown and is paid (pre-sidecar
+        // grow — rare)
         val b = sizeBuckets(
           if (backfillFrom.isEmpty && knownIdCount.isDefined) knownIdCount.get
           else seed.count())
+        // id-sorted within each bucket — see the fold in [[compact]]
         SeedStaged(engine.stageAppend(spark, path(indexPath),
           seed.withColumn("ib", ib(idCol, b))
             .repartition(col("ib"))
@@ -217,8 +198,8 @@ private[graft] object IdSidecar {
     }
   }
 
-  private[graft] def commitStaged(spark: SparkSession, indexPath: String,
-      engine: graft.sinks.ManifestMergeEngine, staged: Staged): Unit =
+  private def commitStaged(spark: SparkSession, indexPath: String,
+      engine: ManifestMergeEngine, staged: Staged): Unit =
     staged match {
       case PendingStaged(st) => engine.commitStaged(spark, st)
       case SeedStaged(st, b) =>
@@ -227,6 +208,46 @@ private[graft] object IdSidecar {
         engine.commitStaged(spark, st)
         writeBucketsMeta(spark, indexPath, b, engine)
     }
+
+  /** One data table's share of a grow: its rows, the partition column
+    * they stage under (None: the table's existing layout), and the
+    * [[graft.tools.PhaseTimer]] phase that times its commit.
+    */
+  private[graft] final case class TableAppend(path: String, rows: DataFrame,
+      partCol: Option[String], phase: String)
+
+  /** A store grow under the commit-order contract above. The sidecar
+    * append of `ids` and every table of `tables` STAGE concurrently on
+    * [[StagePool]] (the Spark jobs; the contract orders commits, not
+    * writes). Only once EVERY staging write has succeeded do the
+    * manifest commits run: the sidecar first, then `tables` in order. A
+    * failed staging write therefore commits nothing — the grow is absent
+    * and its replay re-runs it whole; the staged files are orphans GC
+    * reclaims. [[StagePool.getAll]] awaits every staging job before it
+    * rethrows, so none is left running against frames the caller
+    * releases on abort. `backfillFrom`/`knownIdCount` are [[append]]'s.
+    */
+  private[graft] def growStaged(indexPath: String, ids: DataFrame,
+      idCol: String, engine: ManifestMergeEngine, sidecarPhase: String,
+      tables: Seq[TableAppend], backfillFrom: Option[DataFrame] = None,
+      knownIdCount: Option[Long] = None): Unit = {
+    val spark = ids.sparkSession
+    val sidecar = StagePool.submit(spark) {
+      val st = stageAppend(indexPath, ids, idCol, engine, backfillFrom,
+        knownIdCount)
+      () => commitStaged(spark, indexPath, engine, st)
+    }
+    val data = tables.map { t =>
+      StagePool.submit(spark) {
+        val st = engine.stageAppend(spark, t.path, t.rows, t.partCol)
+        () => engine.commitStaged(spark, st)
+      }
+    }
+    val commits = StagePool.getAll(sidecar +: data)
+    (sidecarPhase +: tables.map(_.phase)).zip(commits).foreach {
+      case (phase, commit) => graft.tools.PhaseTimer(phase)(commit())
+    }
+  }
 
   /** Increments at or below this id count probe by LITERAL `id IN (…)`
     * pushed to the parquet reader — with [[compact]] sorting each folded
@@ -250,7 +271,7 @@ private[graft] object IdSidecar {
     */
   def presentIds(spark: SparkSession, indexPath: String,
       fallback: => DataFrame, increment: DataFrame, idCol: String,
-      engine: MergeEngine): DataFrame =
+      engine: ManifestMergeEngine): DataFrame =
     (readBuckets(spark, indexPath, engine),
       engine.read(spark, path(indexPath))) match {
       case (Some(buckets), Some(ids)) =>
@@ -284,11 +305,11 @@ private[graft] object IdSidecar {
     }
 
   /** Physically drop purged ids — O(touched buckets + pending), the
-    * [[MergeEngine.replacePartitions]] machinery the main tables' purge
+    * [[ManifestMergeEngine.replacePartitions]] machinery the main tables' purge
     * already uses. No-op on sidecar-less stores.
     */
   def purge(spark: SparkSession, indexPath: String, deletedIds: DataFrame,
-      idCol: String, engine: MergeEngine): Unit =
+      idCol: String, engine: ManifestMergeEngine): Unit =
     (readBuckets(spark, indexPath, engine),
       engine.read(spark, path(indexPath))) match {
       case (Some(buckets), Some(ids)) =>
@@ -328,7 +349,7 @@ private[graft] object IdSidecar {
     * logs.
     */
   def fold(spark: SparkSession, indexPath: String,
-      engine: MergeEngine): Unit =
+      engine: ManifestMergeEngine): Unit =
     readBuckets(spark, indexPath, engine).foreach { _ =>
       engine.read(spark, pendingPath(indexPath)).foreach { p =>
         if (!p.isEmpty) {
@@ -346,13 +367,13 @@ private[graft] object IdSidecar {
   /** Full maintenance: [[fold]] the pending log, MERGE the accumulated
     * runs into the bucketed base layout (clearing them), then compact
     * the layout's small files — the O(stored-ids) passes that stay on
-    * the stores' own [[MergeEngine.compact]] maintenance cadence while
+    * the stores' own [[ManifestMergeEngine.compact]] maintenance cadence while
     * the in-stream cadence runs only the O(pending) fold. Each step is
     * crash-idempotent in the presence sense (re-merged duplicates cannot
     * change a probe verdict and coalesce at the next rewrite). No-op on
     * sidecar-less stores.
     */
-  def compact(spark: SparkSession, indexPath: String, engine: MergeEngine,
+  def compact(spark: SparkSession, indexPath: String, engine: ManifestMergeEngine,
       targetBytes: Long): Unit =
     readBuckets(spark, indexPath, engine).foreach { buckets =>
       fold(spark, indexPath, engine)

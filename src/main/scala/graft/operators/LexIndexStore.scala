@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sinks.{ManifestMergeEngine, MergeEngine}
+import graft.sinks.ManifestMergeEngine
 
 /** Persisted inverted index for lexical (BM25) retrieval — the
   * build-once/search-many lifecycle for text, mirroring what
@@ -13,8 +13,8 @@ import graft.sinks.{ManifestMergeEngine, MergeEngine}
   * index build is its own pipeline stage and every search must plan
   * against STORED postings instead of re-touching the corpus.
   *
-  * Layout under `indexPath` — four tables, all managed through the
-  * [[MergeEngine]] seam (ACID manifest backend by default, so growth and
+  * Layout under `indexPath` — four tables, all managed through a
+  * [[ManifestMergeEngine]] (the ACID manifest backend, so growth and
   * maintenance are snapshot-isolated from concurrent searches):
   * {{{
   *   postings/  tb=<N>/ (<id>, token, tf)   inverted lists, bucketed by token hash
@@ -55,7 +55,7 @@ object LexIndexStore {
     * rationale: gcEvery=16 keeps the per-trigger commit cost free of the
     * O(store files) orphan sweep; [[compact]] still forces a sweep.
     */
-  private[operators] def defaultEngine: MergeEngine =
+  private[operators] def defaultEngine: ManifestMergeEngine =
     new ManifestMergeEngine(gcEvery = 16)
 
   private def postingsPath(p: String) = s"$p/postings"
@@ -89,7 +89,7 @@ object LexIndexStore {
       idCol: String)
 
   private def readMeta(spark: SparkSession, indexPath: String,
-      engine: MergeEngine): Meta =
+      engine: ManifestMergeEngine): Meta =
     // scalar-metadata cache keyed by the meta table's committed snapshot
     // (round-16: the head() here was a full Spark job paid several times
     // per trigger/search for a value that only changes on commit)
@@ -124,7 +124,7 @@ object LexIndexStore {
     * BM25 contributions forever, the one unrecoverable corruption.
     */
   private def appendCorpus(indexPath: String, docs: DataFrame, idCol: String,
-      textCol: String, nBuckets: Int, engine: MergeEngine,
+      textCol: String, nBuckets: Int, engine: ManifestMergeEngine,
       metadata: Option[DataFrame] = None,
       backfillIds: Option[DataFrame] = None,
       knownDocCount: Option[Long] = None): Unit = {
@@ -199,69 +199,24 @@ object LexIndexStore {
       // stored-id sidecar FIRST (probe authority — the IdSidecar
       // commit-order contract), then doclens, then postings: each crash
       // window degrades to absent-from-search, never to duplicated rows.
-      // `backfillIds` rides through from the GROW path so a pre-sidecar
-      // store's first grow seeds the fold from the COMPLETE stored-id
-      // set, never from its own increment (IdSidecar.append's contract).
-      //
-      // Round-16: the contract orders the COMMITS, not the staging
-      // writes — so on the manifest engine the doclens and postings
-      // files STAGE concurrently (background Spark jobs over the pinned
-      // tf) while the sidecar append runs, and only the manifest
-      // publishes keep the sidecar → doclens → postings order (guide
-      // §2.6 overlap; a staging failure aborts with ZERO of the three
-      // committed — strictly tighter than the sequential form's
-      // partial-commit window, and the orphaned staged files are the
-      // same crashed-append debris GC already reclaims).
-      val postingsFrame = tf
-        .withColumn("tb", tokenBucket(col("token"), nBuckets))
-        .repartition(col("tb"))
-      val spark = docs.sparkSession
-      engine match {
-        case m: graft.sinks.ManifestMergeEngine =>
-          val sidecarStaged = StagePool.submit(spark)(
-            IdSidecar.stageAppend(indexPath, dl0.select(col(idCol)), idCol,
-              m, backfillFrom = backfillIds,
-              // bucket sizing only — saves the seed path's own count pass
-              knownIdCount = Some(nDocsEst)))
-          val dlStaged = StagePool.submit(spark)(
-            m.stageAppend(spark, doclensPath(indexPath), dl, None))
-          val postStaged = StagePool.submit(spark)(
-            m.stageAppend(spark, postingsPath(indexPath), postingsFrame,
-              Some("tb")))
-          try {
-            graft.tools.PhaseTimer("lex_sidecar_append") {
-              IdSidecar.commitStaged(spark, indexPath, m,
-                StagePool.get(sidecarStaged))
-            }
-            graft.tools.PhaseTimer("lex_doclens_append") {
-              m.commitStaged(spark, StagePool.get(dlStaged))
-            }
-            graft.tools.PhaseTimer("lex_postings_append") {
-              m.commitStaged(spark, StagePool.get(postStaged))
-            }
-          } finally {
-            // an abort must not leave a staging job running against the
-            // checkpointed tf the finally below is about to release
-            StagePool.awaitQuietly(sidecarStaged)
-            StagePool.awaitQuietly(dlStaged)
-            StagePool.awaitQuietly(postStaged)
-          }
-        case _ =>
-          graft.tools.PhaseTimer("lex_sidecar_append") {
-            IdSidecar.append(indexPath, dl0.select(col(idCol)), idCol, engine,
-              backfillFrom = backfillIds, knownIdCount = Some(nDocsEst))
-          }
-          graft.tools.PhaseTimer("lex_doclens_append") {
-            engine.append(doclensPath(indexPath), dl)
-          }
-          // cluster by bucket before the partitioned write (the
-          // AnnIndexStore save rationale: unclustered, every task sprays
-          // a file into every tb=N/ directory)
-          graft.tools.PhaseTimer("lex_postings_append") {
-            engine.appendPartitioned(postingsPath(indexPath), postingsFrame,
-              "tb")
-          }
-      }
+      // All three stage concurrently over the pinned tf; none commits
+      // until all have staged. `backfillIds` rides through from the GROW
+      // path so a pre-sidecar store's first grow seeds the fold from the
+      // COMPLETE stored-id set, never from its own increment
+      // (IdSidecar.append's contract). The postings frame is clustered by
+      // bucket before the partitioned write (the AnnIndexStore save
+      // rationale: unclustered, every task sprays a file into every tb=N/
+      // directory).
+      IdSidecar.growStaged(indexPath, dl0.select(col(idCol)), idCol, engine,
+        "lex_sidecar_append", Seq(
+          IdSidecar.TableAppend(doclensPath(indexPath), dl, None,
+            "lex_doclens_append"),
+          IdSidecar.TableAppend(postingsPath(indexPath), tf
+            .withColumn("tb", tokenBucket(col("token"), nBuckets))
+            .repartition(col("tb")), Some("tb"), "lex_postings_append")),
+        backfillFrom = backfillIds,
+        // bucket sizing only — saves the seed path's own count pass
+        knownIdCount = Some(nDocsEst))
     } finally Dedup.releaseLocalCheckpoint(tf)
   }
 
@@ -300,7 +255,7 @@ object LexIndexStore {
     * exact; the refresh itself repairs the count the next one reads).
     */
   private def refreshMeta(spark: SparkSession, indexPath: String,
-      nBuckets: Int, idColName: String, engine: MergeEngine,
+      nBuckets: Int, idColName: String, engine: ManifestMergeEngine,
       prevDocs: Long): Unit = {
     val dl = engine.read(spark, doclensPath(indexPath))
       .getOrElse(throw new IllegalStateException(
@@ -394,7 +349,7 @@ object LexIndexStore {
     */
   def build(spark: SparkSession, indexPath: String, docs: DataFrame,
       idCol: String, textCol: String, nBuckets: Int = 64,
-      engine: MergeEngine = LexIndexStore.defaultEngine,
+      engine: ManifestMergeEngine = LexIndexStore.defaultEngine,
       metadata: Option[org.apache.spark.sql.DataFrame] = None): Unit = {
     require(nBuckets > 0, "nBuckets must be positive")
     require(engine.read(spark, metaPath(indexPath)).isEmpty,
@@ -416,7 +371,7 @@ object LexIndexStore {
     */
   def addDocuments(spark: SparkSession, indexPath: String, docs: DataFrame,
       idCol: String, textCol: String,
-      engine: MergeEngine = LexIndexStore.defaultEngine,
+      engine: ManifestMergeEngine = LexIndexStore.defaultEngine,
       metadata: Option[org.apache.spark.sql.DataFrame] = None): Unit = {
     val meta = readMeta(spark, indexPath, engine)
     require(idCol == meta.idCol,
@@ -471,7 +426,7 @@ object LexIndexStore {
   def streamingAddDocuments(spark: SparkSession, sourceDir: String,
       schema: StructType, indexPath: String, checkpointDir: String,
       idCol: String, textCol: String,
-      engine: MergeEngine = LexIndexStore.defaultEngine,
+      engine: ManifestMergeEngine = LexIndexStore.defaultEngine,
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"),
       foldEvery: Int = 8)
@@ -512,12 +467,12 @@ object LexIndexStore {
   /** Delete documents: tombstones, not rewrites. Each tombstone carries
     * the doc's stored length so searches can correct the corpus scalars
     * without re-aggregating doclens — O(deletes) work: one point join
-    * against doclens, replay-idempotent dedupAppend through the engine
-    * seam. Ids absent from the index are ignored (the attach join drops
+    * against doclens, replay-idempotent dedupAppend through the engine.
+    * Ids absent from the index are ignored (the attach join drops
     * them).
     */
   def deleteDocuments(spark: SparkSession, indexPath: String, ids: DataFrame,
-      idCol: String, engine: MergeEngine = LexIndexStore.defaultEngine): Unit = {
+      idCol: String, engine: ManifestMergeEngine = LexIndexStore.defaultEngine): Unit = {
     val doclens = engine.read(spark, doclensPath(indexPath))
       .getOrElse(throw new IllegalStateException(
         s"no lexical index at $indexPath"))
@@ -535,7 +490,7 @@ object LexIndexStore {
     * planned frames are snapshot-isolated by the manifest backend.
     */
   def purgeDeleted(spark: SparkSession, indexPath: String,
-      engine: MergeEngine = LexIndexStore.defaultEngine): Unit = {
+      engine: ManifestMergeEngine = LexIndexStore.defaultEngine): Unit = {
     engine.read(spark, deletedPath(indexPath)).foreach { del =>
       if (!del.isEmpty) {
         val meta = readMeta(spark, indexPath, engine)
@@ -592,7 +547,7 @@ object LexIndexStore {
     * compaction.
     */
   def compact(spark: SparkSession, indexPath: String,
-      engine: MergeEngine = LexIndexStore.defaultEngine,
+      engine: ManifestMergeEngine = LexIndexStore.defaultEngine,
       targetBytes: Long = 128L << 20): Unit = {
     engine.compact(spark, postingsPath(indexPath), targetBytes)
     engine.compact(spark, doclensPath(indexPath), targetBytes)
@@ -639,7 +594,7 @@ object LexIndexStore {
   def searchTopK(spark: SparkSession, indexPath: String, queries: DataFrame,
       qidCol: String, qtextCol: String, k: Int,
       k1: Double = 1.2, b: Double = 0.75,
-      engine: MergeEngine = LexIndexStore.defaultEngine,
+      engine: ManifestMergeEngine = LexIndexStore.defaultEngine,
       docPred: Option[Column] = None,
       matchCols: Seq[String] = Nil): DataFrame = {
     val meta = readMeta(spark, indexPath, engine)

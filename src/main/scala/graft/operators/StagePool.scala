@@ -98,12 +98,6 @@ private[graft] object StagePool {
     results.collect { case Right(v) => v }
   }
 
-  /** Await ignoring outcome — for abort paths that must not leave a
-    * staging job running against state the caller is about to release.
-    */
-  def awaitQuietly(fut: Future[_]): Unit =
-    try { fut.get(); () } catch { case _: Throwable => () }
-
   /** Await ignoring failure, returning the value when the future
     * SUCCEEDED — abort paths use this to release a successfully built
     * sibling's resources (e.g. a localCheckpoint's blocks) instead of

@@ -43,17 +43,6 @@ object TextOps {
     */
   val stopwords: Map[String, Seq[String]] = graft.functions.Stopwords.lists
 
-  /** Fraction of whitespace tokens that are stopwords of `lang`
-    * ([[graft.functions.StopwordRatios]] kernel — tokenizes once per row,
-    * not once per language).
-    */
-  def stopwordRatio(text: Column, lang: String): Column = {
-    val idx = graft.functions.Stopwords.langs.indexOf(lang)
-    require(idx >= 0,
-      s"unsupported language '$lang' (supported: ${graft.functions.Stopwords.langs.mkString(", ")})")
-    element_at(graft.functions.LangExpressions.stopword_ratios(text), idx + 1)
-  }
-
   /** Language-ID heuristic: CJK-character density decides zh; otherwise the
     * language whose stopword list hits most tokens (ties break to the
     * lexicographically larger code — deterministic).

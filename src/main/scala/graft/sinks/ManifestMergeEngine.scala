@@ -172,6 +172,11 @@ final class ManifestMergeEngine(retainVersions: Int = 3,
     }
   }
 
+  /** [[append]] establishing/extending a `partCol`-partitioned layout —
+    * for tables whose READ path prunes on that column (e.g. an ANN
+    * index's inverted lists keyed by list id). The distinct entry point
+    * exists because a FIRST write has no layout to derive from.
+    */
   def appendPartitioned(path: String, batch: DataFrame, partCol: String): Unit = {
     val spark = batch.sparkSession
     require(batch.columns.contains(partCol),
@@ -207,7 +212,11 @@ final class ManifestMergeEngine(retainVersions: Int = 3,
     }
   }
 
-  def compact(spark: SparkSession, path: String, targetBytes: Long): Unit = {
+  /** Maintenance: rewrite into ≈`targetBytes` files, row multiset and
+    * partition layout unchanged (Delta/Iceberg `OPTIMIZE`).
+    */
+  def compact(spark: SparkSession, path: String,
+      targetBytes: Long = 128L << 20): Unit = {
     val fs = fileSystem(spark, path)
     if (currentManifest(fs, path).isEmpty) return
     retryingCommit(spark, path) { prevOpt =>
@@ -238,6 +247,16 @@ final class ManifestMergeEngine(retainVersions: Int = 3,
     catch { case _: java.io.IOException => () }
   }
 
+  /** Maintenance: REPLACE the listed `partCol` partitions' contents with
+    * `batch`'s rows (all of which must belong to those partitions),
+    * leaving every other partition untouched — the physical row-delete
+    * primitive tombstone purging needs (a replaced partition's absent
+    * rows are gone; an empty replacement drops the partition entirely).
+    * Single-maintainer contract: `batch` is computed by the CALLER from a
+    * snapshot, so a concurrent write into the same partitions between
+    * that read and this commit can be lost — run it as a maintenance
+    * pass, like [[compact]].
+    */
   def replacePartitions(spark: SparkSession, path: String, batch: DataFrame,
       partCol: String, partitions: Seq[Any]): Unit = {
     require(batch.columns.contains(partCol),
@@ -263,6 +282,9 @@ final class ManifestMergeEngine(retainVersions: Int = 3,
     }
   }
 
+  /** Replace the WHOLE table's contents atomically. Same single-maintainer
+    * caveat as [[replacePartitions]].
+    */
   def overwrite(spark: SparkSession, path: String, batch: DataFrame): Unit =
     retryingCommit(spark, path) { prev =>
       // the new contents REPLACE the table: commit only the staged files;
@@ -310,8 +332,7 @@ final class ManifestMergeEngine(retainVersions: Int = 3,
     * with a unique commit prefix — invisible to every reader until the
     * manifest publishes, reclaimed as orphans by GC if the commit never
     * happens (exactly a crashed append's window, which the contract
-    * already tolerates; an abort-before-any-commit is strictly SAFER
-    * than the sequential form's partial-commit window).
+    * already tolerates).
     *
     * `partCol` = Some requires the table be on that layout already (or
     * empty); None stages under the table's existing layout like
@@ -357,7 +378,9 @@ final class ManifestMergeEngine(retainVersions: Int = 3,
       existing ++ staged.files
     }
 
-  /** Current snapshot of a manifest table (readers' entry point). */
+  /** Current snapshot of a manifest table (readers' entry point); None
+    * before the table's first commit.
+    */
   def read(spark: SparkSession, path: String): Option[DataFrame] = {
     val fs = fileSystem(spark, path)
     currentManifest(fs, path).flatMap(m => readFiles(spark, path, m.files))

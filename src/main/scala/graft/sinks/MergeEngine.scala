@@ -2,19 +2,24 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The storage-backend seam for keyed table maintenance (SURVEY §2.6).
+/** The storage-backend seam for the F1 tables' keyed maintenance
+  * (SURVEY §2.6).
   *
   * [[graft.streaming.F1Pipeline]] dispatches every per-batch table load
   * through one of these operations; the trait is the single point where a
-  * deployment swaps the table format. The default, [[ParquetSwapMergeEngine]],
+  * deployment swaps the F1 table format. The default, [[ParquetSwapMergeEngine]],
   * is the vanilla-parquet read-merge-write with an atomic-ish directory swap
   * ([[TableSink]] — correct and replay-idempotent, but the swap is not
   * transactional under concurrent readers). [[ManifestMergeEngine]] is the
   * ACID-flavored implementation (file-level manifest log, snapshot-isolated
   * readers, version retention + GC); a Delta `MERGE INTO` / Iceberg `MERGE`
-  * backend is likewise one class with the same six operations and identical
+  * backend is likewise one class with the same five operations and identical
   * call sites — the reference's analogue is Postgres transactional upserts
-  * (loader.py:159-193, supabase_loader.py:134-172).
+  * (loader.py:159-193, supabase_loader.py:134-172). The search stores
+  * ([[graft.operators.LexIndexStore]], [[graft.operators.AnnIndexStore]]
+  * and their sidecar and model tables) are manifest-only: they take a
+  * [[ManifestMergeEngine]], whose staging, snapshot and maintenance
+  * operations are plain methods of that class, not of this seam.
   *
   * Contract shared by every implementation:
   *  - incoming batches carry `(_batch, _line)` arrival-order columns
@@ -24,8 +29,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    per-column last-non-null per key; `partitionedCoalescingUpsert` is the
   *    same merge over a partitioned layout touching only the batch's
   *    partitions; `append` never rewrites; `dedupAppend` appends only keys
-  *    absent from the table; `compact` rewrites file layout without changing
-  *    the row multiset.
+  *    absent from the table.
   */
 trait MergeEngine {
   /** U1/U2 — keyed upsert, whole-row last-wins by (_batch, _line). */
@@ -45,48 +49,9 @@ trait MergeEngine {
   /** U4 — plain append; the high-volume path, never rewrites. */
   def append(path: String, batch: DataFrame): Unit
 
-  /** [[append]] establishing/extending a `partCol`-partitioned layout —
-    * for tables whose READ path prunes on that column (e.g. an ANN
-    * index's inverted lists keyed by list id). Engines that already
-    * derive the layout from the existing table may route the follow-up
-    * appends through the same code as [[append]]; the distinct entry
-    * point exists because a FIRST write has no layout to derive from.
-    */
-  def appendPartitioned(path: String, batch: DataFrame, partCol: String): Unit
-
   /** A9/A2 — append only keys not already present in the table. */
   def dedupAppend(spark: SparkSession, path: String, batch: DataFrame,
       key: String): Unit
-
-  /** Maintenance: rewrite into ≈`targetBytes` files, row multiset unchanged
-    * (Delta/Iceberg `OPTIMIZE` in an ACID implementation).
-    */
-  def compact(spark: SparkSession, path: String, targetBytes: Long = 128L << 20): Unit
-
-  /** Maintenance: REPLACE the listed `partCol` partitions' contents with
-    * `batch`'s rows (all of which must belong to those partitions),
-    * leaving every other partition untouched — the physical row-delete
-    * primitive tombstone purging needs (a replaced partition's absent
-    * rows are gone; an empty replacement drops the partition entirely).
-    * Single-maintainer contract: `batch` is computed by the CALLER from a
-    * snapshot, so a concurrent write into the same partitions between
-    * that read and this commit can be lost — run it as a maintenance
-    * pass, like [[compact]].
-    */
-  def replacePartitions(spark: SparkSession, path: String, batch: DataFrame,
-      partCol: String, partitions: Seq[Any]): Unit
-
-  /** Replace the WHOLE table's contents atomically (blue/green swap /
-    * truncate-and-load). Same single-maintainer caveat as
-    * [[replacePartitions]].
-    */
-  def overwrite(spark: SparkSession, path: String, batch: DataFrame): Unit
-
-  /** Current snapshot of a table this engine maintains; None if the table
-    * doesn't exist yet. The read side of the seam — consumers (e.g.
-    * [[graft.operators.AnnIndexStore]]) stay backend-agnostic.
-    */
-  def read(spark: SparkSession, path: String): Option[DataFrame]
 }
 
 /** Default engine: vanilla-parquet read-merge-write with staged directory
@@ -108,24 +73,7 @@ object ParquetSwapMergeEngine extends MergeEngine {
   def append(path: String, batch: DataFrame): Unit =
     TableSink.append(path, batch)
 
-  def appendPartitioned(path: String, batch: DataFrame, partCol: String): Unit =
-    batch.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy(partCol).parquet(path)
-
   def dedupAppend(spark: SparkSession, path: String, batch: DataFrame,
       key: String): Unit =
     TableSink.dedupAppend(spark, path, batch, key)
-
-  def compact(spark: SparkSession, path: String, targetBytes: Long): Unit =
-    TableSink.compact(spark, path, targetBytes)
-
-  def replacePartitions(spark: SparkSession, path: String, batch: DataFrame,
-      partCol: String, partitions: Seq[Any]): Unit =
-    TableSink.replacePartitions(spark, path, batch, partCol, partitions)
-
-  def overwrite(spark: SparkSession, path: String, batch: DataFrame): Unit =
-    TableSink.overwrite(spark, path, batch)
-
-  def read(spark: SparkSession, path: String): Option[DataFrame] =
-    TableSink.readIfExists(spark, path)
 }

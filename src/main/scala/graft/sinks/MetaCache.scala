@@ -15,9 +15,6 @@ import org.apache.spark.sql.SparkSession
   * `SnapshotManagement` sense, never result caching: every cached value
   * is a pure function of one committed table version, and the first read
   * at each version still computes it from the stored bytes.
-  *
-  * Non-manifest engines (no snapshot identity to key on) bypass the cache
-  * entirely.
   */
 private[graft] object MetaCache {
 
@@ -55,22 +52,19 @@ private[graft] object MetaCache {
     * namespaces different projections of the same table.
     */
   def cached[T <: AnyRef](spark: SparkSession, path: String, kind: String,
-      engine: MergeEngine)(compute: => T): T = engine match {
-    case m: ManifestMergeEngine =>
-      m.snapshotToken(spark, path) match {
-        case Some(tok) =>
-          val key = (path, kind, tok._1, tok._2)
-          var h = cache.get(key)
-          if (h == null) {
-            val fresh = new Holder(() => compute)
-            val prev = cache.putIfAbsent(key, fresh)
-            h = if (prev != null) prev else fresh
-          }
-          h.force().asInstanceOf[T]
-        case None => compute
-      }
-    case _ => compute
-  }
+      engine: ManifestMergeEngine)(compute: => T): T =
+    engine.snapshotToken(spark, path) match {
+      case Some(tok) =>
+        val key = (path, kind, tok._1, tok._2)
+        var h = cache.get(key)
+        if (h == null) {
+          val fresh = new Holder(() => compute)
+          val prev = cache.putIfAbsent(key, fresh)
+          h = if (prev != null) prev else fresh
+        }
+        h.force().asInstanceOf[T]
+      case None => compute
+    }
 
   /** Populate the cache at WRITE time with the value the writer just
     * committed — a maintenance pass that overwrites scalar metadata (a
@@ -88,13 +82,10 @@ private[graft] object MetaCache {
     * engine's CAS).
     */
   def put[T <: AnyRef](spark: SparkSession, path: String, kind: String,
-      engine: MergeEngine, value: T): Unit = engine match {
-    case m: ManifestMergeEngine =>
-      m.snapshotToken(spark, path).foreach { tok =>
-        val h = new Holder(() => value)
-        h.force()
-        cache.put((path, kind, tok._1, tok._2), h)
-      }
-    case _ => ()
-  }
+      engine: ManifestMergeEngine, value: T): Unit =
+    engine.snapshotToken(spark, path).foreach { tok =>
+      val h = new Holder(() => value)
+      h.force()
+      cache.put((path, kind, tok._1, tok._2), h)
+    }
 }

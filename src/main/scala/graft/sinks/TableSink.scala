@@ -302,48 +302,6 @@ object TableSink {
     fs.delete(tmpOld, true)
   }
 
-  /** Replace the WHOLE table's contents atomically (blue/green swap /
-    * truncate-and-load) — [[replaceTable]]'s staged swap, crash-recovered.
-    */
-  def overwrite(spark: SparkSession, path: String, batch: DataFrame): Unit = {
-    recover(spark, path)
-    replaceTable(batch, path)
-  }
-
-  /** Replace the listed `partCol` partitions' contents with `batch`'s
-    * rows, leaving every other partition untouched — the physical
-    * row-delete primitive (a listed partition absent from `batch` is
-    * dropped entirely). Contract: every `batch` row belongs to a LISTED
-    * partition (rows outside them are silently discarded with the
-    * staging dir), and the caller is the only writer (maintenance pass,
-    * same posture as [[compact]]).
-    */
-  def replacePartitions(spark: SparkSession, path: String, batch: DataFrame,
-      partCol: String, partitions: Seq[Any]): Unit = {
-    require(batch.columns.contains(partCol),
-      s"replacePartitions requires the batch to carry $partCol")
-    recoverPartitions(spark, path)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stagingRoot = new Path(path + ".staging")
-    if (fs.exists(stagingRoot)) fs.delete(stagingRoot, true)
-    // cluster by the partition column: each replaced partition lands in
-    // few contiguous files instead of a per-task spray
-    batch.repartition(col(partCol)).write.partitionBy(partCol)
-      .mode(SaveMode.Overwrite).parquet(stagingRoot.toString)
-    val oldRoot = new Path(path + ".old_parts")
-    fs.mkdirs(new Path(path))
-    fs.mkdirs(oldRoot)
-    partitions.foreach { v =>
-      val name = s"$partCol=${Option(v).map(_.toString).getOrElse("__HIVE_DEFAULT_PARTITION__")}"
-      val target = new Path(path, name)
-      if (fs.exists(target)) fs.rename(target, new Path(oldRoot, name))
-      val staged = new Path(stagingRoot, name)
-      if (fs.exists(staged)) fs.rename(staged, target)
-    }
-    fs.delete(oldRoot, true)
-    fs.delete(stagingRoot, true)
-  }
-
   /** Deterministic in-batch first-wins per key (A1 semantics): when the
     * batch carries the `(_batch, _line)` arrival columns they decide the
     * survivor (and are consumed, not written); `dropDuplicates` alone

@@ -5,16 +5,14 @@ package graft.tools
   * residual at datadom6 scale needed its growing TERM named — probe read
   * vs data/manifest commits vs GC sweeps — not another end-to-end number.
   * Disabled (the default) this is one branch on a static final; enabled
-  * (`-Dgraft.phase.timing` on the probe JVM, or env `GRAFT_PHASE_TIMING`)
-  * each wrapped phase prints one JSON line the probe scripts aggregate.
+  * (env `GRAFT_PHASE_TIMING`) each wrapped phase prints one JSON line the
+  * probe scripts aggregate.
   * Never enabled in benches or tests — measurement plumbing, not a
   * product surface.
   */
 object PhaseTimer {
 
-  val enabled: Boolean =
-    sys.props.contains("graft.phase.timing") ||
-      sys.env.contains("GRAFT_PHASE_TIMING")
+  val enabled: Boolean = sys.env.contains("GRAFT_PHASE_TIMING")
 
   def apply[T](phase: String)(f: => T): T =
     if (!enabled) f

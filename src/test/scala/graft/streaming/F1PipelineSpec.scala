@@ -40,21 +40,6 @@ class F1PipelineSpec extends SparkSpec {
     def dedupAppend(s: SparkSession, p: String, b: DataFrame, k: String): Unit = {
       before("dedupAppend"); ParquetSwapMergeEngine.dedupAppend(s, p, b, k)
     }
-    def compact(s: SparkSession, p: String, t: Long): Unit =
-      ParquetSwapMergeEngine.compact(s, p, t)
-    def replacePartitions(s: SparkSession, p: String, b: DataFrame, pc: String,
-        parts: Seq[Any]): Unit = {
-      before("replacePartitions"); ParquetSwapMergeEngine.replacePartitions(s, p, b, pc, parts)
-    }
-    def overwrite(s: SparkSession, p: String, b: DataFrame): Unit = {
-      before("overwrite"); ParquetSwapMergeEngine.overwrite(s, p, b)
-    }
-    def read(s: SparkSession, p: String): Option[DataFrame] = {
-      before("read"); ParquetSwapMergeEngine.read(s, p)
-    }
-    def appendPartitioned(p: String, b: DataFrame, pc: String): Unit = {
-      before("appendPartitioned"); ParquetSwapMergeEngine.appendPartitioned(p, b, pc)
-    }
   }
 
   test("unified streaming pipeline: two files → two batches → converged tables") {
