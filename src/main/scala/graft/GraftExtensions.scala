@@ -1,299 +1,23 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{HyperplaneBucketExpr, InflateRaw, LangId, MinHashSignature, ParsePyLine, ShingleHashes, SigAgreement, SimHash64, StopwordRatios, VecDot}
+import graft.functions.Registry
+import graft.sql.TableFunctions
 
-/** Session-extension installer: makes the engine's custom expressions
-  * (`inflate_raw`, `parse_pyline`) available in every session created with
+/** Session-extension installer: every session created with
   * `--conf spark.sql.extensions=graft.GraftExtensions` — the idiomatic
-  * cluster-wide registration path. Local callers that build their own
-  * session get the same functions lazily via the Column wrappers
-  * (InflateRaw.inflate_raw / ParsePyLine.parse_pyline).
+  * cluster-wide registration path — gets the whole function catalog, the
+  * scalar/aggregate kernels of [[graft.functions.Registry.kernels]] and the
+  * table functions of [[graft.sql.TableFunctions.functions]]. A session
+  * built without it gets the same catalog from its first Column-wrapper
+  * call ([[graft.functions.Registry.call]]); `TableFunctions.registerOnce`
+  * installs the table functions alone.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("inflate_raw"),
-      new ExpressionInfo(classOf[InflateRaw].getName, "inflate_raw"),
-      (exprs: Seq[Expression]) => InflateRaw(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("parse_pyline"),
-      new ExpressionInfo(classOf[ParsePyLine].getName, "parse_pyline"),
-      (exprs: Seq[Expression]) => ParsePyLine(exprs.head)))
-
-    // shared with the Column-wrapper registration path (same contract)
-    def litInt(e: Expression): Int =
-      graft.functions.TextVectorExpressions.litInt(e)
-    ext.injectFunction((
-      FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      (exprs: Seq[Expression]) => ShingleHashes(exprs(0), litInt(exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_signature"),
-      (exprs: Seq[Expression]) => MinHashSignature(exprs(0), litInt(exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("sig_agreement"),
-      new ExpressionInfo(classOf[SigAgreement].getName, "sig_agreement"),
-      (exprs: Seq[Expression]) => SigAgreement(exprs(0), exprs(1))))
-    import graft.functions.{HammingDistExpr, SignPackExpr}
-    ext.injectFunction((
-      FunctionIdentifier("sign_pack"),
-      new ExpressionInfo(classOf[SignPackExpr].getName, "sign_pack"),
-      (exprs: Seq[Expression]) => SignPackExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("hamming_dist"),
-      new ExpressionInfo(classOf[HammingDistExpr].getName, "hamming_dist"),
-      (exprs: Seq[Expression]) => HammingDistExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("hyperplane_bucket"),
-      new ExpressionInfo(classOf[HyperplaneBucketExpr].getName, "hyperplane_bucket"),
-      (exprs: Seq[Expression]) => HyperplaneBucketExpr(exprs(0), litInt(exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("stopword_ratios"),
-      new ExpressionInfo(classOf[StopwordRatios].getName, "stopword_ratios"),
-      (exprs: Seq[Expression]) => StopwordRatios(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("lang_id"),
-      new ExpressionInfo(classOf[LangId].getName, "lang_id"),
-      (exprs: Seq[Expression]) => LangId(exprs.head)))
-
-    import graft.functions.ShingleHashSeq
-    ext.injectFunction((
-      FunctionIdentifier("shingle_hash_seq"),
-      new ExpressionInfo(classOf[ShingleHashSeq].getName, "shingle_hash_seq"),
-      (exprs: Seq[Expression]) => ShingleHashSeq(exprs(0), litInt(exprs(1)))))
-
-    // quantizer-model kernels: the centroid/codebook matrix arrives as a
-    // foldable nested-array literal (same contract as the Column wrappers)
-    import graft.functions.{NearestCentroids, PqAdcExpr, PqEncodeExpr, PqLutExpr, TextVectorExpressions}
-    ext.injectFunction((
-      FunctionIdentifier("nearest_centroids"),
-      new ExpressionInfo(classOf[NearestCentroids].getName, "nearest_centroids"),
-      (exprs: Seq[Expression]) => NearestCentroids(exprs(0),
-        TextVectorExpressions.foldableMatrix(exprs(1)), litInt(exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier("pq_encode"),
-      new ExpressionInfo(classOf[PqEncodeExpr].getName, "pq_encode"),
-      (exprs: Seq[Expression]) => PqEncodeExpr(exprs(0),
-        TextVectorExpressions.foldableMatrix(exprs(1)), litInt(exprs(2)), litInt(exprs(3)))))
-    ext.injectFunction((
-      FunctionIdentifier("pq_lut"),
-      new ExpressionInfo(classOf[PqLutExpr].getName, "pq_lut"),
-      (exprs: Seq[Expression]) => PqLutExpr(exprs(0),
-        TextVectorExpressions.foldableMatrix(exprs(1)), litInt(exprs(2)), litInt(exprs(3)))))
-    ext.injectFunction((
-      FunctionIdentifier("pq_adc"),
-      new ExpressionInfo(classOf[PqAdcExpr].getName, "pq_adc"),
-      (exprs: Seq[Expression]) => PqAdcExpr(exprs(0), exprs(1), litInt(exprs(2)))))
-
-    // the post-round-7 kernel set — keep this installer in lockstep with
-    // every Registry.registerOnce site (the session-extension path is
-    // the contract a cluster admin installs ONCE; a kernel reachable
-    // only through the lazy Column-wrapper registration would silently
-    // be missing from plain spark.sql sessions)
-    def litDouble(e: Expression): Double =
-      graft.functions.TextVectorExpressions.litDouble(e)
-    def foldableMatrix(e: Expression): Array[Array[Double]] =
-      graft.functions.TextVectorExpressions.foldableMatrix(e)
-    def foldableDoubles(e: Expression): Array[Double] =
-      graft.functions.TextVectorExpressions.foldableDoubles(e)
-    def foldableStrings(e: Expression): Array[String] =
-      graft.functions.TextVectorExpressions.foldableStrings(e)
-    import graft.functions.{AdaptiveNearestCentroids, HashedBowIdsExpr, HashedTfVecExpr, HashedBowMarginExpr, HashedBowMarginsExpr, MergeFoldExpr, PiiScanExpr, RepetitionStatsExpr, Sq8DotExpr, Sq8EncodeExpr, Sq8NormExpr, TokenGramExpr, UnigramViterbiExpr, WordPieceEncodeExpr}
-    ext.injectFunction((
-      FunctionIdentifier("adaptive_nearest_centroids"),
-      new ExpressionInfo(classOf[AdaptiveNearestCentroids].getName, "adaptive_nearest_centroids"),
-      (exprs: Seq[Expression]) => AdaptiveNearestCentroids(exprs(0),
-        foldableMatrix(exprs(1)), litInt(exprs(2)), litInt(exprs(3)),
-        litDouble(exprs(4)))))
-    ext.injectFunction((
-      FunctionIdentifier("sq8_encode"),
-      new ExpressionInfo(classOf[Sq8EncodeExpr].getName, "sq8_encode"),
-      (exprs: Seq[Expression]) => Sq8EncodeExpr(exprs(0),
-        foldableDoubles(exprs(1)), foldableDoubles(exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier("sq8_dot"),
-      new ExpressionInfo(classOf[Sq8DotExpr].getName, "sq8_dot"),
-      (exprs: Seq[Expression]) => Sq8DotExpr(exprs(0), exprs(1),
-        foldableDoubles(exprs(2)), foldableDoubles(exprs(3)))))
-    ext.injectFunction((
-      FunctionIdentifier("sq8_norm"),
-      new ExpressionInfo(classOf[Sq8NormExpr].getName, "sq8_norm"),
-      (exprs: Seq[Expression]) => Sq8NormExpr(exprs(0),
-        foldableDoubles(exprs(1)), foldableDoubles(exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier("unigram_viterbi"),
-      new ExpressionInfo(classOf[UnigramViterbiExpr].getName, "unigram_viterbi"),
-      (exprs: Seq[Expression]) => UnigramViterbiExpr(exprs(0),
-        foldableStrings(exprs(1)), foldableDoubles(exprs(2)),
-        litInt(exprs(3)), litDouble(exprs(4)))))
-    ext.injectFunction((
-      FunctionIdentifier("hashed_bow_ids"),
-      new ExpressionInfo(classOf[HashedBowIdsExpr].getName, "hashed_bow_ids"),
-      (exprs: Seq[Expression]) => HashedBowIdsExpr(exprs(0), litInt(exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("hashed_tf_vec"),
-      new ExpressionInfo(classOf[HashedTfVecExpr].getName, "hashed_tf_vec"),
-      (exprs: Seq[Expression]) => HashedTfVecExpr(exprs(0), litInt(exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("hashed_bow_margin"),
-      new ExpressionInfo(classOf[HashedBowMarginExpr].getName, "hashed_bow_margin"),
-      (exprs: Seq[Expression]) => HashedBowMarginExpr(exprs(0),
-        foldableDoubles(exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("hashed_bow_margins"),
-      new ExpressionInfo(classOf[HashedBowMarginsExpr].getName, "hashed_bow_margins"),
-      (exprs: Seq[Expression]) => HashedBowMarginsExpr(exprs(0),
-        foldableDoubles(exprs(1)), litInt(exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier("merge_fold"),
-      new ExpressionInfo(classOf[MergeFoldExpr].getName, "merge_fold"),
-      (exprs: Seq[Expression]) => MergeFoldExpr(exprs(0),
-        foldableStrings(exprs(1)),
-        graft.functions.TextVectorExpressions.litBoolean(exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier("wordpiece_encode"),
-      new ExpressionInfo(classOf[WordPieceEncodeExpr].getName, "wordpiece_encode"),
-      (exprs: Seq[Expression]) => WordPieceEncodeExpr(exprs(0),
-        foldableStrings(exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("pii_scan"),
-      new ExpressionInfo(classOf[PiiScanExpr].getName, "pii_scan"),
-      (exprs: Seq[Expression]) => PiiScanExpr(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("repetition_stats"),
-      new ExpressionInfo(classOf[RepetitionStatsExpr].getName, "repetition_stats"),
-      (exprs: Seq[Expression]) => RepetitionStatsExpr(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("token_gram"),
-      new ExpressionInfo(classOf[TokenGramExpr].getName, "token_gram"),
-      (exprs: Seq[Expression]) => TokenGramExpr(exprs(0), exprs(2),
-        litInt(exprs(1)))))
-
-    // table-valued entry points for the flagship operator FAMILIES (ANN
-    // search, BM25 search, dedup verdicts) — the scalar kernels above
-    // cover expressions, these cover whole-operator semantics so a plain
-    // SQL session can run the search/dedup lifecycle end to end
-    // (graft.sql.TableFunctions scaladoc; x68/x69/x70 run these under
-    // the driver's DuckDB gate as pure spark.sql strings)
-    import graft.sql.TableFunctions
-    ext.injectTableFunction((
-      FunctionIdentifier("ann_topk"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "ann_topk"),
-      (exprs: Seq[Expression]) => TableFunctions.annTopK(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("bm25_topk"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "bm25_topk"),
-      (exprs: Seq[Expression]) => TableFunctions.bm25TopK(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("dedup_keep"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "dedup_keep"),
-      (exprs: Seq[Expression]) => TableFunctions.dedupKeep(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("line_dedup"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "line_dedup"),
-      (exprs: Seq[Expression]) => TableFunctions.lineDedup(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("bloom_new_ids"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "bloom_new_ids"),
-      (exprs: Seq[Expression]) => TableFunctions.bloomNewIds(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("media_probe"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "media_probe"),
-      (exprs: Seq[Expression]) => TableFunctions.mediaProbe(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("heavy_hitters"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "heavy_hitters"),
-      (exprs: Seq[Expression]) => TableFunctions.heavyHitters(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("trigram_kn_score"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "trigram_kn_score"),
-      (exprs: Seq[Expression]) => TableFunctions.trigramKnScore(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("weighted_sample"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "weighted_sample"),
-      (exprs: Seq[Expression]) => TableFunctions.weightedSample(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("asof_join"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "asof_join"),
-      (exprs: Seq[Expression]) => TableFunctions.asofJoin(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("sessionize"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "sessionize"),
-      (exprs: Seq[Expression]) => TableFunctions.sessionize(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("chunk_docs"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "chunk_docs"),
-      (exprs: Seq[Expression]) => TableFunctions.chunkDocs(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("pack_sequences"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "pack_sequences"),
-      (exprs: Seq[Expression]) => TableFunctions.packSequences(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("stratified_sample"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "stratified_sample"),
-      (exprs: Seq[Expression]) => TableFunctions.stratifiedSample(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("shuffle_shards"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "shuffle_shards"),
-      (exprs: Seq[Expression]) => TableFunctions.shuffleShards(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("budget_select"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "budget_select"),
-      (exprs: Seq[Expression]) => TableFunctions.budgetSelect(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("resample_locf"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "resample_locf"),
-      (exprs: Seq[Expression]) => TableFunctions.resampleLocf(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("hybrid_topk"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "hybrid_topk"),
-      (exprs: Seq[Expression]) => TableFunctions.hybridTopK(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("pii_scrub"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "pii_scrub"),
-      (exprs: Seq[Expression]) => TableFunctions.piiScrub(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("decontaminate"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "decontaminate"),
-      (exprs: Seq[Expression]) => TableFunctions.decontaminate(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("containment_decontaminate"),
-      new ExpressionInfo(TableFunctions.getClass.getName,
-        "containment_decontaminate"),
-      (exprs: Seq[Expression]) => TableFunctions.containmentDecontaminate(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("semdedup_keep"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "semdedup_keep"),
-      (exprs: Seq[Expression]) => TableFunctions.semdedupKeep(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("mix_sample"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "mix_sample"),
-      (exprs: Seq[Expression]) => TableFunctions.mixSample(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("split_assign"),
-      new ExpressionInfo(TableFunctions.getClass.getName, "split_assign"),
-      (exprs: Seq[Expression]) => TableFunctions.splitAssign(exprs)))
-
-    // aggregate kernels (scalar-function block above covers expressions;
-    // this is the repo's first native AggregateFunction)
-    import graft.functions.MisraGriesAgg
-    ext.injectFunction((
-      FunctionIdentifier("mg_topk"),
-      new ExpressionInfo(classOf[MisraGriesAgg].getName, "mg_topk"),
-      (exprs: Seq[Expression]) => MisraGriesAgg(exprs(0), litInt(exprs(1)))))
+    Registry.kernels.foreach(ext.injectFunction)
+    TableFunctions.functions.foreach(ext.injectTableFunction)
   }
 }

@@ -2,11 +2,10 @@ package graft.functions
 
 import java.util.zip.Inflater
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{BinaryType, DataType}
 
 /** Raw-DEFLATE (zlib with negative wbits, i.e. no zlib header) decompression
@@ -77,18 +76,8 @@ object InflateRaw {
     }
   }
 
-  /** Register `inflate_raw` in a session's function registry (idempotent),
-    * making it callable from SQL text as well as the Column API.
+  /** Column wrapper: raw-inflate a BINARY column (installs the function
+    * catalog in the active session on first use, see [[Registry]]).
     */
-  def register(spark: SparkSession): Unit =
-    Registry.registerOnce(spark, "inflate_raw")(exprs => InflateRaw(exprs.head))
-
-  /** Column wrapper: raw-inflate a BINARY column. Registers the function in
-    * the active session on first use (the registry is the public seam for
-    * turning a custom Expression into a Column in Spark 4).
-    */
-  def inflate_raw(c: Column): Column = {
-    register(SparkSession.active)
-    call_function("inflate_raw", c)
-  }
+  def inflate_raw(c: Column): Column = Registry.call("inflate_raw", c)
 }

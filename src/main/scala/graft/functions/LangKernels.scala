@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -122,15 +121,6 @@ case class LangId(child: Expression) extends UnaryExpression {
 }
 
 object LangExpressions {
-  def register(spark: SparkSession): Unit = {
-    Registry.registerOnce(spark, "stopword_ratios")(
-      exprs => StopwordRatios(exprs.head))
-    Registry.registerOnce(spark, "lang_id")(exprs => LangId(exprs.head))
-  }
-  def stopword_ratios(c: Column): Column = {
-    register(SparkSession.active); call_function("stopword_ratios", c)
-  }
-  def lang_id(c: Column): Column = {
-    register(SparkSession.active); call_function("lang_id", c)
-  }
+  def stopword_ratios(c: Column): Column = Registry.call("stopword_ratios", c)
+  def lang_id(c: Column): Column = Registry.call("lang_id", c)
 }

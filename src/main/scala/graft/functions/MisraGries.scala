@@ -4,13 +4,13 @@ import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -158,12 +158,5 @@ object MisraGries {
     * SQL once registered (the analyzer wraps the bare AggregateFunction
     * in its AggregateExpression on resolution).
     */
-  def mg_topk(item: Column, k: Int): Column = {
-    register(SparkSession.active)
-    call_function("mg_topk", item, lit(k))
-  }
-
-  def register(spark: SparkSession): Unit =
-    Registry.registerOnce(spark, "mg_topk")(exprs =>
-      MisraGriesAgg(exprs(0), TextVectorExpressions.litInt(exprs(1))))
+  def mg_topk(item: Column, k: Int): Column = Registry.call("mg_topk", item, lit(k))
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -66,11 +65,5 @@ object ParsePyLine {
         UTF8String.fromString(e.ts)))
   }
 
-  def register(spark: SparkSession): Unit =
-    Registry.registerOnce(spark, "parse_pyline")(exprs => ParsePyLine(exprs.head))
-
-  def parse_pyline(c: Column): Column = {
-    register(SparkSession.active)
-    call_function("parse_pyline", c)
-  }
+  def parse_pyline(c: Column): Column = Registry.call("parse_pyline", c)
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -1565,270 +1565,81 @@ case class PqAdcExpr(left: Expression, right: Expression, k: Int)
   override def prettyName: String = "pq_adc"
 }
 
-/** Column wrappers + SQL registration for the kernels. Int parameters are
-  * passed as literal expressions in SQL and folded at build time.
+/** Column wrappers for the kernels. Each calls its kernel by name through
+  * [[Registry.call]]; int parameters travel as literals and are folded at
+  * expression build.
   */
 object TextVectorExpressions {
+  import Registry.call
+  import org.apache.spark.sql.functions.typedlit
 
-  private[graft] def litInt(e: Expression): Int =
-    e.eval(null) match {
-      case i: Int  => i
-      case l: Long => l.toInt
-      case other   => throw new IllegalArgumentException(s"expected int literal, got $other")
-    }
+  def shingle_hashes(c: Column, n: Int): Column = call("shingle_hashes", c, lit(n))
+  def shingle_hash_seq(c: Column, n: Int): Column = call("shingle_hash_seq", c, lit(n))
+  def pii_scan(c: Column): Column = call("pii_scan", c)
+  def repetition_stats(c: Column): Column = call("repetition_stats", c)
+  def token_gram(c: Column, n: Int, pos: Column): Column = call("token_gram", c, lit(n), pos)
+  def minhash_signature(c: Column, k: Int): Column = call("minhash_signature", c, lit(k))
+  def simhash64(c: Column): Column = call("simhash64", c)
+  def vec_dot(a: Column, b: Column): Column = call("vec_dot", a, b)
+  def sig_agreement(a: Column, b: Column): Column = call("sig_agreement", a, b)
+  def sign_pack(c: Column): Column = call("sign_pack", c)
+  def hamming_dist(a: Column, b: Column): Column = call("hamming_dist", a, b)
+  def hyperplane_bucket(c: Column, planes: Int): Column =
+    call("hyperplane_bucket", c, lit(planes))
 
-  def register(spark: SparkSession): Unit = {
-    Registry.registerOnce(spark, "shingle_hashes")(
-      exprs => ShingleHashes(exprs(0), litInt(exprs(1))))
-    Registry.registerOnce(spark, "minhash_signature")(
-      exprs => MinHashSignature(exprs(0), litInt(exprs(1))))
-    Registry.registerOnce(spark, "simhash64")(exprs => SimHash64(exprs.head))
-    Registry.registerOnce(spark, "vec_dot")(exprs => VecDot(exprs(0), exprs(1)))
-    Registry.registerOnce(spark, "sig_agreement")(
-      exprs => SigAgreement(exprs(0), exprs(1)))
-    Registry.registerOnce(spark, "sign_pack")(exprs => SignPackExpr(exprs.head))
-    Registry.registerOnce(spark, "hamming_dist")(
-      exprs => HammingDistExpr(exprs(0), exprs(1)))
-    Registry.registerOnce(spark, "hyperplane_bucket")(
-      exprs => HyperplaneBucketExpr(exprs(0), litInt(exprs(1))))
-  }
+  private def matrix(m: Array[Array[Double]]): Column = typedlit(m.map(_.toSeq).toSeq)
 
-  def shingle_hashes(c: Column, n: Int): Column = {
-    register(SparkSession.active); call_function("shingle_hashes", c, lit(n))
-  }
-  def shingle_hash_seq(c: Column, n: Int): Column = {
-    Registry.registerOnce(SparkSession.active, "shingle_hash_seq")(
-      exprs => ShingleHashSeq(exprs(0), litInt(exprs(1))))
-    call_function("shingle_hash_seq", c, lit(n))
-  }
-  def pii_scan(c: Column): Column = {
-    Registry.registerOnce(SparkSession.active, "pii_scan")(
-      exprs => PiiScanExpr(exprs(0)))
-    call_function("pii_scan", c)
-  }
-  def repetition_stats(c: Column): Column = {
-    Registry.registerOnce(SparkSession.active, "repetition_stats")(
-      exprs => RepetitionStatsExpr(exprs(0)))
-    call_function("repetition_stats", c)
-  }
-  def token_gram(c: Column, n: Int, pos: Column): Column = {
-    Registry.registerOnce(SparkSession.active, "token_gram")(
-      exprs => TokenGramExpr(exprs(0), exprs(2), litInt(exprs(1))))
-    call_function("token_gram", c, lit(n), pos)
-  }
-  def minhash_signature(c: Column, k: Int): Column = {
-    register(SparkSession.active); call_function("minhash_signature", c, lit(k))
-  }
-  def simhash64(c: Column): Column = {
-    register(SparkSession.active); call_function("simhash64", c)
-  }
-  def vec_dot(a: Column, b: Column): Column = {
-    register(SparkSession.active); call_function("vec_dot", a, b)
-  }
-  def sig_agreement(a: Column, b: Column): Column = {
-    register(SparkSession.active); call_function("sig_agreement", a, b)
-  }
-  def sign_pack(c: Column): Column = {
-    register(SparkSession.active); call_function("sign_pack", c)
-  }
-  def hamming_dist(a: Column, b: Column): Column = {
-    register(SparkSession.active); call_function("hamming_dist", a, b)
-  }
-  def hyperplane_bucket(c: Column, planes: Int): Column = {
-    register(SparkSession.active); call_function("hyperplane_bucket", c, lit(planes))
-  }
-
-  /** The centroid matrix travels as a foldable nested-array literal and is
-    * extracted once at expression build — one fixed registration, no
-    * closure capture, no registry growth per index build.
-    */
-  private[graft] def foldableMatrix(e: Expression): Array[Array[Double]] = {
-    val arr = e.eval(null).asInstanceOf[ArrayData]
-    (0 until arr.numElements()).map { i =>
-      arr.getArray(i).toDoubleArray()
-    }.toArray
-  }
-
-  private def registerNearestCentroids(spark: SparkSession): Unit =
-    Registry.registerOnce(spark, "nearest_centroids")(
-      exprs => NearestCentroids(exprs(0), foldableMatrix(exprs(1)), litInt(exprs(2))))
-
-  def nearest_centroids(c: Column, centroids: Array[Array[Double]], nprobe: Int): Column = {
-    registerNearestCentroids(SparkSession.active)
-    call_function("nearest_centroids", c,
-      org.apache.spark.sql.functions.typedlit(centroids.map(_.toSeq).toSeq), lit(nprobe))
-  }
-
-  private[graft] def litDouble(e: Expression): Double =
-    e.eval(null) match {
-      case d: Double  => d
-      case f: Float   => f.toDouble
-      case i: Int     => i.toDouble
-      case l: Long    => l.toDouble
-      case d: org.apache.spark.sql.types.Decimal => d.toDouble
-      case other => throw new IllegalArgumentException(s"expected numeric literal, got $other")
-    }
-
-  private def registerAdaptiveNearestCentroids(spark: SparkSession): Unit =
-    Registry.registerOnce(spark, "adaptive_nearest_centroids")(
-      exprs => AdaptiveNearestCentroids(exprs(0), foldableMatrix(exprs(1)),
-        litInt(exprs(2)), litInt(exprs(3)), litDouble(exprs(4))))
+  def nearest_centroids(c: Column, centroids: Array[Array[Double]], nprobe: Int): Column =
+    call("nearest_centroids", c, matrix(centroids), lit(nprobe))
 
   def adaptive_nearest_centroids(c: Column, centroids: Array[Array[Double]],
-      minProbe: Int, maxProbe: Int, margin: Double): Column = {
-    registerAdaptiveNearestCentroids(SparkSession.active)
-    call_function("adaptive_nearest_centroids", c,
-      org.apache.spark.sql.functions.typedlit(centroids.map(_.toSeq).toSeq),
+      minProbe: Int, maxProbe: Int, margin: Double): Column =
+    call("adaptive_nearest_centroids", c, matrix(centroids),
       lit(minProbe), lit(maxProbe), lit(margin))
-  }
 
-  private def registerPq(spark: SparkSession): Unit = {
-    Registry.registerOnce(spark, "pq_encode")(
-      exprs => PqEncodeExpr(exprs(0), foldableMatrix(exprs(1)), litInt(exprs(2)), litInt(exprs(3))))
-    Registry.registerOnce(spark, "pq_lut")(
-      exprs => PqLutExpr(exprs(0), foldableMatrix(exprs(1)), litInt(exprs(2)), litInt(exprs(3))))
-    Registry.registerOnce(spark, "pq_adc")(
-      exprs => PqAdcExpr(exprs(0), exprs(1), litInt(exprs(2))))
-  }
+  def pq_encode(c: Column, codebooks: Array[Array[Double]], m: Int, k: Int): Column =
+    call("pq_encode", c, matrix(codebooks), lit(m), lit(k))
+  def pq_lut(c: Column, codebooks: Array[Array[Double]], m: Int, k: Int): Column =
+    call("pq_lut", c, matrix(codebooks), lit(m), lit(k))
+  def pq_adc(codes: Column, lut: Column, k: Int): Column =
+    call("pq_adc", codes, lut, lit(k))
 
-  def pq_encode(c: Column, codebooks: Array[Array[Double]], m: Int, k: Int): Column = {
-    registerPq(SparkSession.active)
-    call_function("pq_encode", c,
-      org.apache.spark.sql.functions.typedlit(codebooks.map(_.toSeq).toSeq), lit(m), lit(k))
-  }
-  def pq_lut(c: Column, codebooks: Array[Array[Double]], m: Int, k: Int): Column = {
-    registerPq(SparkSession.active)
-    call_function("pq_lut", c,
-      org.apache.spark.sql.functions.typedlit(codebooks.map(_.toSeq).toSeq), lit(m), lit(k))
-  }
-  def pq_adc(codes: Column, lut: Column, k: Int): Column = {
-    registerPq(SparkSession.active)
-    call_function("pq_adc", codes, lut, lit(k))
-  }
-
-  private def registerSq8(spark: SparkSession): Unit = {
-    Registry.registerOnce(spark, "sq8_encode")(
-      exprs => Sq8EncodeExpr(exprs(0), foldableDoubles(exprs(1)),
-        foldableDoubles(exprs(2))))
-    Registry.registerOnce(spark, "sq8_dot")(
-      exprs => Sq8DotExpr(exprs(0), exprs(1), foldableDoubles(exprs(2)),
-        foldableDoubles(exprs(3))))
-    Registry.registerOnce(spark, "sq8_norm")(
-      exprs => Sq8NormExpr(exprs(0), foldableDoubles(exprs(1)),
-        foldableDoubles(exprs(2))))
-  }
-
-  def sq8_encode(c: Column, mins: Array[Double], scales: Array[Double]): Column = {
-    registerSq8(SparkSession.active)
-    call_function("sq8_encode", c,
-      org.apache.spark.sql.functions.typedlit(mins.toSeq),
-      org.apache.spark.sql.functions.typedlit(scales.toSeq))
-  }
+  def sq8_encode(c: Column, mins: Array[Double], scales: Array[Double]): Column =
+    call("sq8_encode", c, typedlit(mins.toSeq), typedlit(scales.toSeq))
   def sq8_dot(q: Column, codes: Column, mins: Array[Double],
-      scales: Array[Double]): Column = {
-    registerSq8(SparkSession.active)
-    call_function("sq8_dot", q, codes,
-      org.apache.spark.sql.functions.typedlit(mins.toSeq),
-      org.apache.spark.sql.functions.typedlit(scales.toSeq))
-  }
+      scales: Array[Double]): Column =
+    call("sq8_dot", q, codes, typedlit(mins.toSeq), typedlit(scales.toSeq))
   def sq8_norm(codes: Column, mins: Array[Double],
-      scales: Array[Double]): Column = {
-    registerSq8(SparkSession.active)
-    call_function("sq8_norm", codes,
-      org.apache.spark.sql.functions.typedlit(mins.toSeq),
-      org.apache.spark.sql.functions.typedlit(scales.toSeq))
-  }
-
-  private[graft] def foldableStrings(e: Expression): Array[String] = {
-    val arr = e.eval(null).asInstanceOf[ArrayData]
-    (0 until arr.numElements()).map(i => arr.getUTF8String(i).toString).toArray
-  }
-
-  private[graft] def foldableDoubles(e: Expression): Array[Double] = {
-    val arr = e.eval(null).asInstanceOf[ArrayData]
-    arr.toDoubleArray()
-  }
-
-  private def registerUnigramViterbi(spark: SparkSession): Unit =
-    Registry.registerOnce(spark, "unigram_viterbi")(
-      exprs => UnigramViterbiExpr(exprs(0), foldableStrings(exprs(1)),
-        foldableDoubles(exprs(2)), litInt(exprs(3)), litDouble(exprs(4))))
+      scales: Array[Double]): Column =
+    call("sq8_norm", codes, typedlit(mins.toSeq), typedlit(scales.toSeq))
 
   def unigram_viterbi(c: Column, pieces: Array[String],
-      logprobs: Array[Double], maxPieceLen: Int, floor: Double): Column = {
-    registerUnigramViterbi(SparkSession.active)
-    call_function("unigram_viterbi", c,
-      org.apache.spark.sql.functions.typedlit(pieces.toSeq),
-      org.apache.spark.sql.functions.typedlit(logprobs.toSeq),
+      logprobs: Array[Double], maxPieceLen: Int, floor: Double): Column =
+    call("unigram_viterbi", c, typedlit(pieces.toSeq), typedlit(logprobs.toSeq),
       lit(maxPieceLen), lit(floor))
-  }
 
-  private def registerHashedBow(spark: SparkSession): Unit = {
-    Registry.registerOnce(spark, "hashed_bow_ids")(
-      exprs => HashedBowIdsExpr(exprs(0), litInt(exprs(1))))
-    Registry.registerOnce(spark, "hashed_tf_vec")(
-      exprs => HashedTfVecExpr(exprs(0), litInt(exprs(1))))
-    Registry.registerOnce(spark, "hashed_bow_margin")(
-      exprs => HashedBowMarginExpr(exprs(0), foldableDoubles(exprs(1))))
-    Registry.registerOnce(spark, "hashed_bow_margins")(
-      exprs => HashedBowMarginsExpr(exprs(0), foldableDoubles(exprs(1)),
-        litInt(exprs(2))))
-    Registry.registerOnce(spark, "wordpiece_encode")(
-      exprs => WordPieceEncodeExpr(exprs(0), foldableStrings(exprs(1))))
-    Registry.registerOnce(spark, "merge_fold")(
-      exprs => MergeFoldExpr(exprs(0), foldableStrings(exprs(1)),
-        litBoolean(exprs(2))))
-  }
-
-  private[graft] def litBoolean(e: Expression): Boolean =
-    e.eval(null) match {
-      case b: Boolean => b
-      case other => throw new IllegalArgumentException(
-        s"expected boolean literal, got $other")
-    }
-
-  def hashed_bow_ids(c: Column, dim: Int): Column = {
-    registerHashedBow(SparkSession.active)
-    call_function("hashed_bow_ids", c, lit(dim))
-  }
-  def hashed_tf_vec(c: Column, dim: Int): Column = {
-    registerHashedBow(SparkSession.active)
-    call_function("hashed_tf_vec", c, lit(dim))
-  }
-  def hashed_bow_margin(c: Column, weights: Array[Double]): Column = {
-    registerHashedBow(SparkSession.active)
-    call_function("hashed_bow_margin", c,
-      org.apache.spark.sql.functions.typedlit(weights.toSeq))
-  }
+  def hashed_bow_ids(c: Column, dim: Int): Column = call("hashed_bow_ids", c, lit(dim))
+  def hashed_tf_vec(c: Column, dim: Int): Column = call("hashed_tf_vec", c, lit(dim))
+  def hashed_bow_margin(c: Column, weights: Array[Double]): Column =
+    call("hashed_bow_margin", c, typedlit(weights.toSeq))
   /** Per-class margins under a frozen (nClasses × dim) weight matrix,
     * flattened row-major into the expression.
     */
   def hashed_bow_margins(c: Column, weights: Array[Array[Double]]): Column = {
-    registerHashedBow(SparkSession.active)
     // a ragged matrix whose total length happens to divide by nClasses
     // would silently misalign every class's weight row after flattening
     require(weights.nonEmpty && weights.forall(_.length == weights.head.length),
       s"hashed_bow_margins requires a rectangular weight matrix; got row " +
         s"lengths ${weights.map(_.length).distinct.mkString(",")}")
-    call_function("hashed_bow_margins", c,
-      org.apache.spark.sql.functions.typedlit(weights.flatten.toSeq),
-      lit(weights.length))
+    call("hashed_bow_margins", c, typedlit(weights.flatten.toSeq), lit(weights.length))
   }
   /** MaxMatch WordPiece encoding under a frozen vocabulary. */
-  def wordpiece_encode(c: Column, vocab: Array[String]): Column = {
-    registerHashedBow(SparkSession.active)
-    call_function("wordpiece_encode", c,
-      org.apache.spark.sql.functions.typedlit(vocab.toSeq))
-  }
+  def wordpiece_encode(c: Column, vocab: Array[String]): Column =
+    call("wordpiece_encode", c, typedlit(vocab.toSeq))
   /** One batched tokenizer-merge pass (BPE / WordPiece fusion) under a
     * frozen symbol-disjoint pair batch.
     */
   def merge_fold(c: Column, pairs: Seq[(String, String)],
-      wordpiece: Boolean): Column = {
-    registerHashedBow(SparkSession.active)
-    call_function("merge_fold", c,
-      org.apache.spark.sql.functions.typedlit(
-        pairs.flatMap(p => Seq(p._1, p._2))),
-      lit(wordpiece))
-  }
+      wordpiece: Boolean): Column =
+    call("merge_fold", c, typedlit(pairs.flatMap(p => Seq(p._1, p._2))), lit(wordpiece))
 }

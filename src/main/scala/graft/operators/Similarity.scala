@@ -167,29 +167,11 @@ object Similarity {
     */
   def ivfTopK(index: IvfIndex, queries: DataFrame,
       corpusId: String, corpusVec: String,
-      queryId: String, queryVec: String, k: Int, nprobe: Int = 4): DataFrame =
-    ivfTopKWithProbes(index, queries, corpusId, corpusVec, queryId, queryVec, k,
-      graft.functions.TextVectorExpressions.nearest_centroids(
-        col(queryVec), index.centroids, nprobe))
-
-  /** [[ivfTopK]] with margin-routed probes — same routing rule as
-    * [[ivfPqTopKAdaptive]] (see its scaladoc for the measured tradeoff),
-    * for the uncompressed-search path.
-    */
-  def ivfTopKAdaptive(index: IvfIndex, queries: DataFrame,
-      corpusId: String, corpusVec: String,
-      queryId: String, queryVec: String, k: Int,
-      minProbe: Int = 4, maxProbe: Int = 12, margin: Double = 0.5): DataFrame =
-    ivfTopKWithProbes(index, queries, corpusId, corpusVec, queryId, queryVec, k,
-      graft.functions.TextVectorExpressions.adaptive_nearest_centroids(
-        col(queryVec), index.centroids, minProbe, maxProbe, margin))
-
-  private def ivfTopKWithProbes(index: IvfIndex, queries: DataFrame,
-      corpusId: String, corpusVec: String,
-      queryId: String, queryVec: String, k: Int, probeLists: Column): DataFrame = {
+      queryId: String, queryVec: String, k: Int, nprobe: Int = 4): DataFrame = {
     val probes = queries
       .withColumn("_qn", norm(col(queryVec)))
-      .withColumn("cid", explode(probeLists))
+      .withColumn("cid", explode(graft.functions.TextVectorExpressions
+        .nearest_centroids(col(queryVec), index.centroids, nprobe)))
     val candidates = index.assigned
       .withColumn("_cn", norm(col(corpusVec)))
       .join(broadcast(probes), Seq("cid"))

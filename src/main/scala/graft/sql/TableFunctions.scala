@@ -1,10 +1,13 @@
 package graft.sql
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.TableFunctionRegistry
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-import graft.functions.TextVectorExpressions.{litDouble, litInt}
+import graft.functions.Registry
+import graft.functions.Registry.{litBoolean, litDouble, litInt}
 import graft.operators.{AnnIndexStore, Dedup, LexIndexStore, Skew, TextOps}
 
 /** SQL-callable table functions for the engine's flagship operator
@@ -17,7 +20,7 @@ import graft.operators.{AnnIndexStore, Dedup, LexIndexStore, Skew, TextOps}
   * (`spark.sql.extensions`) and `SELECT * FROM ann_topk(...)` works from
   * any SQL client, notebook, or JDBC session.
   *
-  * Contract shared by all three functions: every argument is a foldable
+  * Contract shared by every function here: every argument is a foldable
   * literal (the SQL-native calling convention — paths, column names and
   * knobs are query text, not data), and table-shaped inputs arrive as the
   * NAME of a registered view/table (`queriesView` / `docsView`), resolved
@@ -33,46 +36,49 @@ import graft.operators.{AnnIndexStore, Dedup, LexIndexStore, Skew, TextOps}
   */
 object TableFunctions {
 
-  /** Imperative register-once path (the [[graft.functions.Registry]]
-    * discipline, table-function flavor): sessions built WITHOUT
-    * `spark.sql.extensions=graft.GraftExtensions` opt in with one call —
-    * how the registry queries stay runnable under any caller's session.
-    * The extensions installer remains the cluster-wide path; both routes
-    * bind the same builders.
+  type TableFunction =
+    (FunctionIdentifier, ExpressionInfo, TableFunctionRegistry.TableFunctionBuilder)
+
+  private def tvf(name: String)(build: Seq[Expression] => LogicalPlan): TableFunction =
+    (FunctionIdentifier(name), new ExpressionInfo(getClass.getName, name), build)
+
+  /** The one list of table functions. [[graft.GraftExtensions]] injects it,
+    * [[registerOnce]] installs it, and the Column wrappers install it with
+    * the kernels (see [[graft.functions.Registry]]).
     */
-  def registerOnce(spark: SparkSession): Unit = {
-    val r = spark.sessionState.tableFunctionRegistry
-    def reg(name: String, b: Seq[Expression] => LogicalPlan): Unit = {
-      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-      if (!r.functionExists(id)) r.registerFunction(id,
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          TableFunctions.getClass.getName, name), b)
-    }
-    reg("ann_topk", annTopK)
-    reg("bm25_topk", bm25TopK)
-    reg("dedup_keep", dedupKeep)
-    reg("line_dedup", lineDedup)
-    reg("bloom_new_ids", bloomNewIds)
-    reg("media_probe", mediaProbe)
-    reg("heavy_hitters", heavyHitters)
-    reg("trigram_kn_score", trigramKnScore)
-    reg("weighted_sample", weightedSample)
-    reg("asof_join", asofJoin)
-    reg("sessionize", sessionize)
-    reg("chunk_docs", chunkDocs)
-    reg("pack_sequences", packSequences)
-    reg("stratified_sample", stratifiedSample)
-    reg("shuffle_shards", shuffleShards)
-    reg("budget_select", budgetSelect)
-    reg("resample_locf", resampleLocf)
-    reg("hybrid_topk", hybridTopK)
-    reg("pii_scrub", piiScrub)
-    reg("decontaminate", decontaminate)
-    reg("containment_decontaminate", containmentDecontaminate)
-    reg("semdedup_keep", semdedupKeep)
-    reg("mix_sample", mixSample)
-    reg("split_assign", splitAssign)
-  }
+  val functions: Seq[TableFunction] = Seq(
+    tvf("ann_topk")(annTopK),
+    tvf("bm25_topk")(bm25TopK),
+    tvf("dedup_keep")(dedupKeep),
+    tvf("line_dedup")(lineDedup),
+    tvf("bloom_new_ids")(bloomNewIds),
+    tvf("media_probe")(mediaProbe),
+    tvf("heavy_hitters")(heavyHitters),
+    tvf("trigram_kn_score")(trigramKnScore),
+    tvf("weighted_sample")(weightedSample),
+    tvf("asof_join")(asofJoin),
+    tvf("sessionize")(sessionize),
+    tvf("chunk_docs")(chunkDocs),
+    tvf("pack_sequences")(packSequences),
+    tvf("stratified_sample")(stratifiedSample),
+    tvf("shuffle_shards")(shuffleShards),
+    tvf("budget_select")(budgetSelect),
+    tvf("resample_locf")(resampleLocf),
+    tvf("hybrid_topk")(hybridTopK),
+    tvf("pii_scrub")(piiScrub),
+    tvf("decontaminate")(decontaminate),
+    tvf("containment_decontaminate")(containmentDecontaminate),
+    tvf("semdedup_keep")(semdedupKeep),
+    tvf("mix_sample")(mixSample),
+    tvf("split_assign")(splitAssign))
+
+  /** Imperative register-once path: a session built WITHOUT
+    * `spark.sql.extensions=graft.GraftExtensions` opts in with one call —
+    * how the registry queries stay runnable under any caller's session.
+    * Installs only the names the session lacks, so repeats are free.
+    */
+  def registerOnce(spark: SparkSession): Unit =
+    Registry.installMissing(spark.sessionState.tableFunctionRegistry, functions)
 
   private def litString(e: Expression): String = e.eval(null) match {
     case null => throw new IllegalArgumentException(
@@ -458,23 +464,6 @@ object TableFunctions {
       .queryExecution.logical
   }
 
-  /** `hybrid_topk(annIndexPath, lexIndexPath, queriesView, qidCol,
-    * qtextCol, dim, k [, nCand, kRrf, rerank])` → (query_id, doc_id,
-    * rrf, ann_rank, lex_rank, rank).
-    *
-    * Reciprocal-rank fusion of the two persisted search stores
-    * ([[graft.operators.Retrieval.hybridTopK]] verbatim: the query
-    * embeds in-engine via `hashed_tf_vec(qtext, dim)`, BM25 postings
-    * and IVF-PQ lists are each read pruned, and the rank-only fusion
-    * joins two nCand-bounded frames) — the RAG first-stage hybrid
-    * retriever as one SQL statement.
-    */
-  private def litBool(e: Expression): Boolean = e.eval(null) match {
-    case b: java.lang.Boolean => b
-    case other => throw new IllegalArgumentException(
-      s"expected boolean literal, got $other")
-  }
-
   /** `pii_scrub(docsView, idCol, textCol)` → (doc_id, n_email, n_phone,
     * n_ip, n_ssn, redacted).
     *
@@ -507,7 +496,7 @@ object TableFunctions {
     Dedup.decontaminate(table(litString(exprs(0))), litString(exprs(1)),
       litString(exprs(2)), table(litString(exprs(3))), litString(exprs(4)),
       litString(exprs(5)), n = litInt(exprs(6)),
-      verify = if (exprs.length == 8) litBool(exprs(7)) else false)
+      verify = if (exprs.length == 8) litBoolean(exprs(7)) else false)
       .queryExecution.logical
   }
 
@@ -614,6 +603,17 @@ object TableFunctions {
       .queryExecution.logical
   }
 
+  /** `hybrid_topk(annIndexPath, lexIndexPath, queriesView, qidCol,
+    * qtextCol, dim, k [, nCand, kRrf, rerank])` → (query_id, doc_id,
+    * rrf, ann_rank, lex_rank, rank).
+    *
+    * Reciprocal-rank fusion of the two persisted search stores
+    * ([[graft.operators.Retrieval.hybridTopK]] verbatim: the query
+    * embeds in-engine via `hashed_tf_vec(qtext, dim)`, BM25 postings
+    * and IVF-PQ lists are each read pruned, and the rank-only fusion
+    * joins two nCand-bounded frames) — the RAG first-stage hybrid
+    * retriever as one SQL statement.
+    */
   def hybridTopK(exprs: Seq[Expression]): LogicalPlan = {
     require(exprs.length >= 7 && exprs.length <= 10,
       "hybrid_topk(annIndexPath, lexIndexPath, queriesView, qidCol, " +

@@ -24,7 +24,7 @@ class InflateRawSpec extends SparkSpec {
   }
 
   test("callable from SQL after registration") {
-    InflateRaw.register(spark)
+    Registry.registerOnce(spark)
     val b64 = Fixtures.deflateB64("hello")
     val out = spark.sql(s"SELECT decode(inflate_raw(unbase64('$b64')), 'UTF-8') AS t")
       .collect().head.getString(0)

@@ -371,7 +371,7 @@ class SkewSpec extends SparkSpec {
     // pin the aggregate is also reachable from SQL (the session-
     // extension surface) and arity/type errors surface
     mgItems.createOrReplaceTempView("mg_items")
-    graft.functions.MisraGries.register(spark)
+    graft.functions.Registry.registerOnce(spark)
     val viaSql = spark.sql(
       "SELECT explode(mg_topk(item, 19)) AS e FROM mg_items")
       .select("e.item", "e.est").collect()
