@@ -44,6 +44,9 @@ object F1Transforms {
     exploded
       .select(
         col("driver_key").try_cast("int").as("driver_number"),
+        // (int key, line_id) first, as in `sessions`: both first-wins
+        // windows then share one generated sort ordering
+        col("line_id"),
         col("d.Name").as("name"),
         col("d.TeamName").as("team"),
         col("d.Tla").as("short_name"),
@@ -52,8 +55,7 @@ object F1Transforms {
         col("d.LastName").as("last_name"),
         col("d.CountryCode").as("country_code"),
         col("d.HeadshotUrl").as("headshot_url"),
-        coalesce(col("d.BroadcastName"), col("d.Name")).as("broadcast_name"),
-        col("line_id"))
+        coalesce(col("d.BroadcastName"), col("d.Name")).as("broadcast_name"))
       .filter(col("driver_number").isNotNull)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
@@ -67,14 +69,14 @@ object F1Transforms {
       .select(col("line_id"), from_json(col("payload"), Schemas.sessionInfo).as("s"))
       .select(
         col("s.Key").as("session_key"),
+        col("line_id"), // right after the key; see `drivers`
         col("s.Meeting.Key").as("meeting_key"),
         col("s.Name").as("name"),
         col("s.Type").as("type"),
         parseTs(col("s.StartDate")).as("date"),
         col("s.Meeting.Circuit.ShortName").as("circuit"),
         col("s.Meeting.Location").as("location"),
-        col("s.Meeting.Country.Name").as("country_name"),
-        col("line_id"))
+        col("s.Meeting.Country.Name").as("country_name"))
       .filter(col("session_key").isNotNull)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)

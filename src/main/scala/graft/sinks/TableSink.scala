@@ -91,13 +91,20 @@ object TableSink {
   }
 
   /** Whole-row last-wins per key by (_batch, _line) — shared by the
-    * parquet and JDBC upsert sinks.
+    * parquet and JDBC upsert sinks. The window runs over a
+    * `(keys, _batch, _line, rest)` layout, as [[mergeCoalescing]]'s does,
+    * so tables whose keys have the same types (sessions and drivers: one
+    * int) share the window's generated sort orderings instead of
+    * compiling one per table column order; the result keeps `all`'s
+    * column order.
     */
   private[sinks] def mergeLastWins(all: DataFrame, keys: Seq[String]): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col("_batch").desc, col("_line").desc)
-    all.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
+    val rest = all.columns.filterNot(c => keys.contains(c) || seqCols.contains(c))
+    all.select((keys ++ seqCols ++ rest).map(col): _*)
+      .withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") === 1).select(all.columns.map(col): _*)
   }
 
   /** Per-column last-non-null per key in (_batch, _line) order — shared by

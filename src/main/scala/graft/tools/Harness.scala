@@ -9,8 +9,57 @@ import org.apache.spark.sql.SparkSession
   * breaks their comparability — Verify had already lost
   * `spark.sql.adaptive.enabled` relative to Bench before this was
   * extracted.
+  *
+  * Generated code. Spark keeps ONE JVM-wide cache of Janino-compiled
+  * classes (`CodeGenerator.cache`), keyed by (context class loader,
+  * source), and evicts least-recently-used entries past
+  * `spark.sql.codegen.cache.maxEntries`, default 100. One steady F1
+  * trigger uses 106–171 entries and a dashboard poll 28: a whole-stage
+  * class is held twice, once under the driver's loader and once under the
+  * executor task threads', and the eight table sinks each plan their own
+  * shapes. At 100 entries every trigger therefore evicts each class
+  * before its next use and recompiles all of them. [[CodegenCacheEntries]]
+  * is sized from counts made with the cache unbounded, i.e. the distinct
+  * classes a process compiles: 392 over one whole `f1_backfill` benchmark
+  * run (seed 32; `f1_trickle` seed 33: 360), and 3,451 over both passes
+  * of [[RegistrySweep]] at sf0.01 (3,110 + 341, all 155 queries). 4,096
+  * is the next power of two above the larger count. A steady trigger
+  * then compiles only the classes whose source inlines a per-batch
+  * literal (the sinks' `_batch` id, the dashboard's folded
+  * `current_timestamp`): 2–7 per trigger and 2 per poll.
+  *
+  * The size is a STATIC conf read once per JVM: `CodeGenerator`'s static
+  * initializer builds the cache from `SQLConf.get` on the thread of the
+  * first compile. [[buildSession]] therefore initializes it right after
+  * building the session, while that session is the thread's active one.
+  * A JVM whose first compile ran under a session not built here (or
+  * under no session) keeps Spark's default of 100 and thrashes, and no
+  * later session can resize it.
+  *
+  * `spark.sql.codegen.useIdInClassName=false` names every whole-stage
+  * class `GeneratedIterator` instead of `GeneratedIteratorForCodegenStage<id>`,
+  * so two stages with the same pipeline (e.g. the plain sort stage every
+  * merge window puts after its shuffle) share one class instead of one
+  * per stage id: the distinct classes of one `loadBatch` go from 191 to
+  * 167, of one backfill run from 392 to 351.
   */
 object Harness {
+
+  /** Entries in Spark's generated-class cache; see the object scaladoc
+    * for the counts behind it. */
+  val CodegenCacheEntries = 4096
+
+  /** The codegen settings every session of this program runs with
+    * (`buildSession`, and the test suites' shared session). */
+  val codegenConf: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.sql.codegen.useIdInClassName" -> "false")
+
+  /** Build `CodeGenerator`'s class cache now, from the calling thread's
+    * active session: call right after `getOrCreate`. A no-op if the JVM
+    * already compiled generated code. */
+  def initCodegenCache(): Unit =
+    Class.forName("org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$")
 
   def buildSession(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -59,7 +108,9 @@ object Harness {
       // as raw nanos longs (see graft.tables.Tables.load).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(codegenConf.toMap)
       .getOrCreate()
+    initCodegenCache()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
 import org.apache.spark.sql.functions._
@@ -14,11 +14,11 @@ import org.apache.spark.sql.functions._
   *
   *  1. NONDETERMINISM — a query whose output depends on rdd-id offsets,
   *     cache pressure, or partition arrival order. Caught by running the
-  *     WHOLE registry twice in one JVM (second run sees different rdd
-  *     ids, warm caches, leftover shuffle state — the adversarial
-  *     environment) and comparing the written parquet byte-for-byte,
-  *     falling back to row-level compare to separate value drift from
-  *     encoding drift.
+  *     WHOLE registry twice in one JVM, as two passes (the second pass
+  *     sees different rdd ids, warm caches, leftover shuffle state — the
+  *     adversarial environment) and comparing the written parquet
+  *     byte-for-byte, falling back to row-level compare to separate value
+  *     drift from encoding drift.
   *  2. NON-TOTAL ORDERING — a query whose ORDER BY keys don't uniquely
   *     identify rows, so two value-identical runs can hash differently.
   *     Caught by extracting the outermost global Sort's keys from the
@@ -28,7 +28,10 @@ import org.apache.spark.sql.functions._
   *
   * Usage: runMain graft.tools.RegistrySweep <sfDir> <outDir> [name ...]
   * (names restrict the sweep — also handy as a single-query dev runner).
-  * Exits nonzero if any query fails either check.
+  * Exits nonzero if any query fails either check. Each pass also prints
+  * how many generated classes it compiled (`[sweep] pass N compiled …`):
+  * the second pass re-plans every query, so its count is what the
+  * registry does not reuse from Spark's class cache.
   */
 object RegistrySweep {
 
@@ -94,6 +97,9 @@ object RegistrySweep {
     walk(plan, Map.empty)
   }
 
+  /** Janino compiles so far in this JVM (Spark's own codegen counter). */
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
@@ -115,8 +121,20 @@ object RegistrySweep {
       val cols = df.columns.sorted.toIndexedSeq
       df.select(cols.map(col): _*).collect().map(_.toString).toSeq
     }
+    def crashed(name: String, e: Throwable): Unit = {
+      offenders ::= s"$name: CRASHED ${e.getMessage}"
+      println(s"[sweep] $name CRASHED: ${e.getMessage}")
+      Harness.releaseAllPinned(spark)
+    }
+    def pass[T](n: Int)(body: => T): T = {
+      val c0 = compiles
+      val r = body
+      println(s"[sweep] pass $n compiled ${compiles - c0} generated classes")
+      r
+    }
 
-    names.foreach { name =>
+    // pass 1: every query once, plus its ordering totality
+    val first: Seq[(String, String, String)] = pass(1)(names.flatMap { name =>
       val t0 = System.nanoTime()
       try {
         val p1 = runOnce(name, "")
@@ -141,6 +159,15 @@ object RegistrySweep {
             else "total (single row, unsorted)"
         }
         Harness.releaseAllPinned(spark)
+        println(f"[sweep] $name%-34s rows=$nRows%-7d ${(System.nanoTime() - t0) / 1e9}%6.1fs $totality")
+        Seq((name, p1, totality))
+      } catch { case e: Throwable => crashed(name, e); Nil }
+    })
+
+    // pass 2: the whole registry again in the same JVM (different rdd
+    // ids, warm caches, leftover shuffle state), byte-compared to pass 1
+    pass(2)(first.foreach { case (name, p1, totality) =>
+      try {
         val p2 = runOnce(name, "__2")
         val (h1, h2) = (sha256(p1), sha256(p2))
         val determinism =
@@ -153,14 +180,9 @@ object RegistrySweep {
         val bad = totality.contains("NON-TOTAL") || totality.contains("UNCHECKABLE") ||
           determinism.contains("NONDETERMINISTIC")
         if (bad) offenders ::= s"$name: $totality / $determinism"
-        println(f"[sweep] $name%-34s rows=$nRows%-7d ${(System.nanoTime() - t0) / 1e9}%6.1fs $totality / $determinism")
-      } catch {
-        case e: Throwable =>
-          offenders ::= s"$name: CRASHED ${e.getMessage}"
-          println(s"[sweep] $name CRASHED: ${e.getMessage}")
-          Harness.releaseAllPinned(spark)
-      }
-    }
+        println(f"[sweep] $name%-34s $determinism")
+      } catch { case e: Throwable => crashed(name, e) }
+    })
     println(s"[sweep] ${names.size} queries, ${offenders.size} offenders")
     offenders.reverse.foreach(o => println(s"[sweep] OFFENDER $o"))
     spark.stop()

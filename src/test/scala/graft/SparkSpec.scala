@@ -3,8 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.tools.Harness
+
 /** Shared session base: one lazy local session per suite, UTC, small
   * shuffle-partition count (local mode — SURVEY guide).
+  *
+  * Every suite in the forked test JVM builds its session here, with the
+  * program's codegen settings ([[Harness.codegenConf]]), and Spark's class
+  * cache is built from them when this session is first built
+  * ([[Harness.initCodegenCache]]). So the cache size the tests run with
+  * does not depend on which suite runs first.
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
@@ -19,7 +27,9 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(Harness.codegenConf.toMap)
       .getOrCreate()
+    Harness.initCodegenCache()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -1,23 +1,14 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 internals: the driver-side local-frame parquet path inside
   * [[ManifestMergeEngine]] staging, the snapshot-keyed [[MetaCache]],
   * and the stageAppend/commitStaged split.
   */
-class LocalParquetMetaCacheSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("localparquet-metacache-spec")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "4")
-    .getOrCreate()
+class LocalParquetMetaCacheSpec extends graft.SparkSpec {
 
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("lpmc").toString
